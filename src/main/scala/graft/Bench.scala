@@ -1,35 +1,18 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Driver.session()
     // One-time per-JVM warm (framework + plan-family codegen) — see
     // BenchWarm. Whichever query runs first must not be charged it.
     BenchWarm.generic(spark, sfDir)
     BenchWarm.families(spark, sfDir)
-    // Contention sentinel: a ~1 ms constant-work probe timed before every
-    // query. On an idle box it stays flat (a few ms); if another JVM or
-    // process contends for the cores mid-run, the probe inflates in step
-    // with the contaminated queries — so a polluted artifact is
-    // self-evident (the r3 bench recorded 9-24x regressions on unchanged
-    // trivial plans because the builder's own sbt shared the box).
-    def sentinelMs(): Double = {
-      val t0 = System.nanoTime()
-      // single partition: one task, so the probe times compute+scheduling
-      // latency, not 32-way tiny-task fan-out (~100 ms of pure overhead)
-      spark.range(0, 1000, 1, 1).selectExpr("sum(id)").collect()
-      (System.nanoTime() - t0) / 1e6
-    }
-    sentinelMs() // compile/JIT the probe itself once
+    // Contention sentinel (Driver.sentinelMs) timed before every query: if
+    // another JVM or process contends for the cores mid-run, the probe
+    // inflates in step with the contaminated queries — so a polluted
+    // artifact is self-evident (the r3 bench recorded 9-24x regressions on
+    // unchanged trivial plans because another sbt JVM shared the box).
+    Driver.sentinelMs(spark) // compile/JIT the probe itself once
     // PRE-RUN GATE on the probe itself (round-10): the recorded clean
     // floor is ~43-48 ms median; a pre-run median past 2x that means
     // another process already shares the box and every timing below would
@@ -40,7 +23,7 @@ object Bench {
     // never silently recorded as the cost of the code.
     val quietFloorMs = 48.0
     def sentinelMedian(): Double = {
-      val xs = (1 to 5).map(_ => sentinelMs()).sorted
+      val xs = (1 to 5).map(_ => Driver.sentinelMs(spark)).sorted
       xs(xs.size / 2)
     }
     var preMed = sentinelMedian()
@@ -60,8 +43,7 @@ object Bench {
       // successors' memory (the r2 bench showed unchanged sub-second ops
       // 2.5-3.9x slower from exactly this). Same cleanup as TimeQ's cold
       // mode, so TimeQ predicts these numbers.
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+      Driver.clearState(spark)
       // GC settle barrier: the r4 artifact recorded ns_dedup_jaccard at
       // 2.8x its isolated steady time — the only such query — because the
       // preceding heavy dedup neighbors leave the old gen full of dead
@@ -72,7 +54,7 @@ object Bench {
       System.gc(); System.gc()
     }
     val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      val probe = sentinelMs()
+      val probe = Driver.sentinelMs(spark)
       val t0 = System.nanoTime()
       val countOk = try { fn(spark, sfDir).count(); true }
         catch { case _: Throwable => false }
@@ -96,12 +78,8 @@ object Bench {
       // cleared between the passes, and the full plan compiles its own
       // generated classes (different consumer → different codegen).
       val t1 = System.nanoTime()
-      val fullOk = try {
-        fn(spark, sfDir).queryExecution.toRdd.foreachPartition { it =>
-          while (it.hasNext) it.next()
-        }
-        true
-      } catch { case _: Throwable => false }
+      val fullOk = try { Driver.evaluate(fn(spark, sfDir)); true }
+        catch { case _: Throwable => false }
       val dtFull0 = (System.nanoTime() - t1) / 1e9
       val dtFull = if (fullOk) dtFull0 else -dtFull0
       clearState()

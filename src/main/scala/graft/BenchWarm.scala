@@ -70,11 +70,7 @@ object BenchWarm {
       def runWarm(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Unit =
         // A silently-broken warm would shift every family's first timed
         // query by its compile cost — keep the signal on stderr.
-        try {
-          fn(spark, warmSf).queryExecution.toRdd.foreachPartition { it =>
-            while (it.hasNext) it.next()
-          }
-        }
+        try Driver.evaluate(fn(spark, warmSf))
         catch { case e: Throwable =>
           System.err.println(s"[bench] warm $name failed: ${e.getMessage}")
         }
@@ -100,10 +96,9 @@ object BenchWarm {
         conf.set("spark.sql.adaptive.enabled", aqe)
         conf.set("spark.sql.autoBroadcastJoinThreshold", abt)
       }
-      spark.sharedState.cacheManager.clearCache()
-      // localCheckpoint blocks from warm runs are RDD persistence, not SQL
-      // cache — release them too so the timed runs start block-free.
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+      // Includes the warm runs' localCheckpoint blocks, so the timed runs
+      // start block-free.
+      Driver.clearState(spark)
     }
     // Once-per-dataset / once-per-JVM costs that are NOT steady-state query
     // work, paid here so the queries that exercise them time the operation

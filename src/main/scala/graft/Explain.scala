@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan auditor: prints the formatted physical plan of selected queries
   * (all queries if none named). Used to keep the 100 TB posture honest:
   * check PushedFilters/ReadSchema on scans, broadcast vs sort-merge join
@@ -20,22 +18,14 @@ object Explain {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val names = if (args.length > 1) args.drop(1).toSeq else SparkEntry.queries.keys.toSeq.sorted
     val finalPlan = sys.env.get("SPARK_GRAFT_EXPLAIN_FINAL").contains("1")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Driver.session()
     names.foreach { name =>
       SparkEntry.queries.get(name) match {
         case Some(fn) =>
           println(s"\n========== $name ==========")
           try {
             val df = fn(spark, sfDir)
-            if (finalPlan)
-              df.queryExecution.toRdd.foreachPartition(it => while (it.hasNext) it.next())
+            if (finalPlan) Driver.evaluate(df)
             println(df.queryExecution.explainString(
               org.apache.spark.sql.execution.FormattedMode))
           }

@@ -7,13 +7,13 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** Library entry point for `spark.sql.extensions`: makes graft's custom
-  * expressions first-class session functions without any runtime
-  * registration call.
+  * expressions first-class session functions for SQL text.
   *
   *   spark-submit --conf spark.sql.extensions=graft.GraftExtensions ...
   *
-  * (Queries built through [[graft.operators.SimilarityOps]] also register
-  * `cosine_sim` imperatively, so plain SparkSessions work too.)
+  * This is the only name-based path. The library's own queries build the
+  * same expressions as typed Columns ([[graft.functions]]), so they need
+  * no registered name and resolve in any session.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {

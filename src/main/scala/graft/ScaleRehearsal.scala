@@ -177,15 +177,7 @@ object ScaleRehearsal {
   }
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Driver.session()
 
     // 5k matches the sf0.1 row count; 25k→50k isolates a clean 2x-rows
     // comparison where AQE picks the SAME plan shape on both sides (at 5k
@@ -237,15 +229,9 @@ object ScaleRehearsal {
       // payload expressions — a projection+window+sort plan collapses to
       // a parquet-footer count (measured: 472 B of shuffle for the 100k-row
       // packing query) and the "measurement" would be of nothing.
-      val df = SparkEntry.queries(q)(spark, dir)
-      val acc = spark.sparkContext.longAccumulator(s"rows_$q")
-      df.queryExecution.toRdd.foreachPartition { it =>
-        var n = 0L; while (it.hasNext) { it.next(); n += 1 }; acc.add(n)
-      }
-      val rows = acc.value
+      val rows = Driver.evaluate(SparkEntry.queries(q)(spark, dir))
       val dt = (System.nanoTime() - t0) / 1e9
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+      Driver.clearState(spark)
       // Double.toString, not f"%.2f": the f interpolator is locale-
       // dependent (comma decimals on e.g. de_DE break the JSON).
       val sec = math.round(dt * 100) / 100.0
@@ -359,19 +345,14 @@ object ScaleRehearsal {
         graft.operators.IndexOps.buildGraphIndex(spark, dir, root)
         val buildSec = math.round((System.nanoTime() - t0) / 1e7) / 100.0
         val bw = math.round(writeB.sum / 1e5) / 10.0
-        spark.sharedState.cacheManager.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+        Driver.clearState(spark)
         readB.reset(); writeB.reset()
         val t1 = System.nanoTime()
-        val served = graft.operators.IndexOps.queryGraphIndex(spark, root, dir)
-        val acc = spark.sparkContext.longAccumulator(s"rows_graph_$sfName")
-        served.queryExecution.toRdd.foreachPartition { it =>
-          var n = 0L; while (it.hasNext) { it.next(); n += 1 }; acc.add(n)
-        }
+        val served = Driver.evaluate(
+          graft.operators.IndexOps.queryGraphIndex(spark, root, dir))
         val serveSec = math.round((System.nanoTime() - t1) / 1e7) / 100.0
         val sw = math.round(writeB.sum / 1e5) / 10.0
-        spark.sharedState.cacheManager.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+        Driver.clearState(spark)
         // Recall of the SERVED rows vs brute force (untimed — the claim
         // under test since round 10 is that the stored, build-tuned ef
         // holds the 0.75 floor as N grows, not just that the walk is fast).
@@ -384,10 +365,9 @@ object ScaleRehearsal {
         val recall = math.round(truth.count(got.contains).toDouble / truth.size * 1000) / 1000.0
         val storedEf = graft.ops.ArtifactMeta.readLong(spark, root, "beam_ef")
         val storedRecall = graft.ops.ArtifactMeta.readLong(spark, root, "beam_recall_pm")
-        spark.sharedState.cacheManager.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+        Driver.clearState(spark)
         println(s"""{"query":"graph_index_build","sf":"$sfName","rows":0,"sec":$buildSec,"shuffle_write_mb":$bw,"stored_ef":$storedEf,"stored_recall_pm":$storedRecall}""")
-        println(s"""{"query":"graph_index_serve","sf":"$sfName","rows":${acc.value},"sec":$serveSec,"shuffle_write_mb":$sw,"recall":$recall}""")
+        println(s"""{"query":"graph_index_serve","sf":"$sfName","rows":$served,"sec":$serveSec,"shuffle_write_mb":$sw,"recall":$recall}""")
       }
     }
 
@@ -423,10 +403,6 @@ object ScaleRehearsal {
     // edge list; the edge count is recorded per point. Select with
     // trailing arg `platform_delta`.
     lazy val deltaRoot = graft.ops.ProcessTmp.dir("graft_deltasweep")
-    def cleanup(): Unit = {
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-    }
     def measureDelta(arm: String, isBatch: Column => Column,
         sfName: String, dir: String): Unit = {
       val root = s"$deltaRoot/${arm}_$sfName"
@@ -437,7 +413,7 @@ object ScaleRehearsal {
       val buildSec = math.round((System.nanoTime() - tb) / 1e7) / 100.0
       val bw = math.round(writeB.sum / 1e5) / 10.0
       val br = math.round(readB.sum / 1e5) / 10.0
-      cleanup()
+      Driver.clearState(spark)
       println(s"""{"query":"platform_day1_build","arm":"$arm","sf":"$sfName","sec":$buildSec,"shuffle_write_mb":$bw,"shuffle_read_mb":$br}""")
       var edges = -1L
       readB.reset(); writeB.reset()
@@ -448,7 +424,7 @@ object ScaleRehearsal {
       val deltaSec = math.round((System.nanoTime() - td) / 1e7) / 100.0
       val dw = math.round(writeB.sum / 1e5) / 10.0
       val dr = math.round(readB.sum / 1e5) / 10.0
-      cleanup()
+      Driver.clearState(spark)
       println(s"""{"query":"platform_delta_stage","arm":"$arm","sf":"$sfName","rows":$rows,"edges":$edges,"sec":$deltaSec,"shuffle_write_mb":$dw,"shuffle_read_mb":$dr}""")
     }
     if (only.isEmpty || only("platform_delta"))
@@ -539,10 +515,7 @@ object ScaleRehearsal {
         def fullEval(build: => org.apache.spark.sql.DataFrame, tag: String): Double = {
           readB.reset(); writeB.reset()
           val t0 = System.nanoTime()
-          val df = build
-          df.queryExecution.toRdd.foreachPartition { it =>
-            while (it.hasNext) it.next()
-          }
+          Driver.evaluate(build)
           val sec = math.round((System.nanoTime() - t0) / 1e7) / 100.0
           val w = math.round(writeB.sum / 1e5) / 10.0
           println(s"""{"query":"$tag","sf":"$sfName","rows":$n,"sec":$sec,"shuffle_write_mb":$w}""")
@@ -562,62 +535,6 @@ object ScaleRehearsal {
           "pack_prefix_ranged")
         spark.conf.unset("spark.graft.prefix.minRangedRows")
         docs.unpersist()
-      }
-    }
-
-    // Round-14: THE TOP-N PRE-PRUNE MEASUREMENT (r13 verdict finding #1).
-    // ns_corpus_source_cap's order key is a computed quality, so the
-    // monotone-axis range scan doesn't apply. Two exact forms compete on
-    // a SKEWED source mix (one source owns ~70 % of rows — the crawl
-    // top-domain shape; cached (doc_id, source, n_words, q_u) frame,
-    // 2M/8M/32M rows): the single per-source window + literal rank
-    // filter (whose physical plan Spark rewrites with a PARTIAL
-    // WindowGroupLimit — each map partition forwards ≤ cap rows per
-    // source BEFORE the exchange, i.e. the local per-(source, partition)
-    // top-cap prune, done by the planner), and the EXPLICIT two-level
-    // prune (SamplingOps.sourceCapRanked: local top-cap per (source,
-    // sample-key range), then the global rank). MEASURED VERDICT (the
-    // registered form follows it): the window form wins at every scale
-    // and shuffles ~0.1 MB at 32M rows, because the explicit first level
-    // multiplies the partial prune's group count by the range count
-    // (cap x sources x ranges rows survive per partition vs cap x
-    // sources). Byte-equality of the two forms is spec-pinned
-    // (SamplingOpsSpec); this arm records the PERFORMANCE comparison.
-    // Select with trailing arg `source_cap`.
-    if (only.isEmpty || only("source_cap")) {
-      for ((sfName, n) <- Seq(("rows2m", 2000000L), ("rows8m", 8000000L),
-          ("rows32m", 32000000L))) {
-        val scored = spark.range(n).select(
-          col("id").as("doc_id"),
-          when(pmod(hash(col("id") * 13), lit(10)) < 7, lit("hot"))
-            .otherwise(concat(lit("s"),
-              pmod(hash(col("id") * 29), lit(4)).cast("string"))).as("source"),
-          (pmod(hash(col("id") * 11), lit(200)) + 1).cast("long").as("n_words"),
-          pmod(hash(col("id") * 7), lit(1000000)).cast("long").as("q_u"))
-          .cache()
-        scored.count() // materialize outside both timed windows
-        def fullEval(build: => org.apache.spark.sql.DataFrame, tag: String): Double = {
-          readB.reset(); writeB.reset()
-          val t0 = System.nanoTime()
-          val df = build
-          df.queryExecution.toRdd.foreachPartition { it =>
-            while (it.hasNext) it.next()
-          }
-          val sec = math.round((System.nanoTime() - t0) / 1e7) / 100.0
-          val w = math.round(writeB.sum / 1e5) / 10.0
-          println(s"""{"query":"$tag","sf":"$sfName","rows":$n,"sec":$sec,"shuffle_write_mb":$w}""")
-          sec
-        }
-        val bySource = org.apache.spark.sql.expressions.Window
-          .partitionBy("source").orderBy(col("q_u").desc, col("doc_id").asc)
-        fullEval(scored
-          .withColumn("src_rank", row_number().over(bySource).cast("long"))
-          .where(col("src_rank") <= graft.operators.SamplingOps.SourceCap),
-          "source_cap_window")
-        fullEval(graft.operators.SamplingOps.sourceCapRanked(scored)
-          .where(col("src_rank") <= graft.operators.SamplingOps.SourceCap),
-          "source_cap_pruned")
-        scored.unpersist()
       }
     }
 
@@ -651,7 +568,7 @@ object ScaleRehearsal {
           crawlFilter = col("doc_id") % 50 =!= 0 && !isBatch(col("doc_id")))
         val buildSec = math.round((System.nanoTime() - tb) / 1e7) / 100.0
         val bw = math.round(writeB.sum / 1e5) / 10.0
-        cleanup()
+        Driver.clearState(spark)
         println(s"""{"query":"crawl_day1_build","sf":"$sfName","sec":$buildSec,"shuffle_write_mb":$bw}""")
         readB.reset(); writeB.reset()
         val td = System.nanoTime()
@@ -661,7 +578,7 @@ object ScaleRehearsal {
         val deltaSec = math.round((System.nanoTime() - td) / 1e7) / 100.0
         val dw = math.round(writeB.sum / 1e5) / 10.0
         val dr = math.round(readB.sum / 1e5) / 10.0
-        cleanup()
+        Driver.clearState(spark)
         println(s"""{"query":"crawl_delta_stage","sf":"$sfName","rows":$rows,"sec":$deltaSec,"shuffle_write_mb":$dw,"shuffle_read_mb":$dr}""")
       }
     }
@@ -685,7 +602,7 @@ object ScaleRehearsal {
       graft.pipeline.Pipelines
         .platformBuildCore(spark, dir, root, dayOf(col("doc_id")) === 0).count()
       val buildSec = math.round((System.nanoTime() - tb) / 1e7) / 100.0
-      cleanup()
+      Driver.clearState(spark)
       println(s"""{"query":"platform_multiday","day":0,"sf":"$sfName","sec":$buildSec,"shuffle_write_mb":${math.round(writeB.sum / 1e5) / 10.0},"shuffle_read_mb":${math.round(readB.sum / 1e5) / 10.0}}""")
       for (day <- 1 to 7) {
         readB.reset(); writeB.reset()
@@ -693,7 +610,7 @@ object ScaleRehearsal {
         val rows = graft.pipeline.Pipelines
           .platformDeltaStage(spark, dir, root, c => dayOf(c) === day).count()
         val sec = math.round((System.nanoTime() - td) / 1e7) / 100.0
-        cleanup()
+        Driver.clearState(spark)
         println(s"""{"query":"platform_multiday","day":$day,"sf":"$sfName","rows":$rows,"sec":$sec,"shuffle_write_mb":${math.round(writeB.sum / 1e5) / 10.0},"shuffle_read_mb":${math.round(readB.sum / 1e5) / 10.0}}""")
       }
       // Compact the append logs back to seq/day 0 — the manifest is
@@ -714,7 +631,7 @@ object ScaleRehearsal {
       val cSec = math.round((System.nanoTime() - tc) / 1e7) / 100.0
       val seqDirs = new java.io.File(s"$root/banded").listFiles
         .count(_.getName.startsWith("seq="))
-      cleanup()
+      Driver.clearState(spark)
       println(s"""{"query":"platform_multiday_compact","sf":"$sfName","sec":$cSec,"banded_seq_dirs_after":$seqDirs,"shuffle_write_mb":${math.round(writeB.sum / 1e5) / 10.0},"shuffle_read_mb":${math.round(readB.sum / 1e5) / 10.0}}""")
     }
 

@@ -2,19 +2,21 @@ package graft
 
 import java.util.concurrent.ConcurrentLinkedQueue
 
+import graft.model.Tables
+import graft.pipeline.{Pipelines, ServingEndpoints}
 import org.apache.spark.sql.SparkSession
 
 /** Serving-concurrency micro-harness — the Spark-side analog of the
   * reference's locust load test (/root/reference/test/utils/load_testing.py:
-  * N HttpUsers hammering an endpoint): all `pipe_*` serving queries run
+  * N HttpUsers hammering an endpoint): the 24 API endpoints
+  * (`ServingEndpoints.queries` and `Pipelines.endpoints`) run
   * concurrently from `SPARK_GRAFT_THREADS` driver threads against ONE
   * SparkSession, and the harness reports p50/p95 latency overall and the
   * mean per pipe. Guards the serving edge against driver-side contention
   * regressions (catalog/analyzer locks, codegen cache churn, scheduler
-  * fairness) that a one-query-at-a-time bench can't see.
-  *
-  * `pipe_training_corpus` and `pipe_corpus_build` are excluded — they are
-  * the batch corpus-curation pipelines, not serving endpoints.
+  * fairness) that a one-query-at-a-time bench can't see. Batch builds
+  * (corpus, crawl, platform, training, tokenizer pipes) are not endpoints
+  * and are not served.
   *
   * Usage: `SPARK_GRAFT_SF_DIR=... SPARK_GRAFT_THREADS=8 SPARK_GRAFT_ROUNDS=3
   *   sbt "runMain graft.ServeBench"` → one JSON line on stdout.
@@ -22,42 +24,25 @@ import org.apache.spark.sql.SparkSession
 object ServeBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val threads = sys.env.getOrElse("SPARK_GRAFT_THREADS", "8").toInt
     val rounds = sys.env.getOrElse("SPARK_GRAFT_ROUNDS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val spark = Driver.session(
       // FAIR keeps one heavy pipe from head-of-line-blocking the tiny
       // point lookups — the multi-tenant serving posture.
-      .config("spark.scheduler.mode", "FAIR")
+      "spark.scheduler.mode" -> "FAIR",
       // Long-lived serving session: static dimension frames are persisted
       // once and shared across requests (graft.model.Tables) instead of
       // re-scanned per request by every heavy pipe's joins. Bounded (the
       // five enumerated dims only); facts still stream.
-      .config("spark.graft.serving.cacheDims", "true")
+      "spark.graft.serving.cacheDims" -> "true",
       // ...and the income state is materialized once per session — the
       // reference's API reads income tables its poll loops maintain in
       // MySQL; it never recomputes income per request. IncomeKernel
       // .servingIncome is that materialization.
-      .config("spark.graft.serving.cacheIncome", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      "spark.graft.serving.cacheIncome" -> "true")
 
-    val pipes = SparkEntry.queries.toSeq
-      .filter { case (n, _) =>
-        n.startsWith("pipe_") &&
-          // batch data-prep pipelines, not API endpoints — a serving
-          // harness measuring them would report corpus-build latency as
-          // request latency
-          n != "pipe_training_corpus" && n != "pipe_corpus_build" &&
-          n != "pipe_select_pack" && n != "pipe_corpus_admission" &&
-          n != "pipe_corpus_report" && n != "pipe_tokenizer_eval" &&
-          n != "pipe_platform_build" && n != "pipe_platform_delta" }
-      .sortBy(_._1)
+    val pipes = (ServingEndpoints.queries.keys.toSeq ++ Pipelines.endpoints).sorted
+      .map(n => n -> SparkEntry.queries(n))
 
     // Contention sentinel (the Bench probe, r7 follow-up): a ~1 ms
     // constant-work 1-task probe timed OUTSIDE the concurrent window —
@@ -66,26 +51,23 @@ object ServeBench {
     // PRE or POST value means another process shared the box and the
     // latency percentiles are contaminated (during the run the box is
     // busy BY DESIGN, so only the bracketing probes are meaningful).
-    def sentinelMs(): Double = {
-      val t0 = System.nanoTime()
-      spark.range(0, 1000, 1, 1).selectExpr("sum(id)").collect()
-      (System.nanoTime() - t0) / 1e6
-    }
-    sentinelMs() // compile/JIT the probe once
-    val sentinelPre = sentinelMs()
+    Driver.sentinelMs(spark) // compile/JIT the probe once
+    val sentinelPre = Driver.sentinelMs(spark)
 
     // Warm once single-threaded: codegen/footers are per-JVM costs a
     // long-lived serving session has long since paid.
     pipes.foreach { case (_, fn) => fn(spark, sfDir).count() }
-    spark.sharedState.cacheManager.clearCache()
     // Rebuild the session's materialized serving state after the cache
     // clear (dims + income snapshot) so request timings measure request
     // work — a long-lived server did this once at boot, exactly like the
     // reference's poll loops populated MySQL before the API ever ran.
-    graft.ops.IncomeKernel.servingIncome(spark, sfDir).count()
-    Seq(graft.model.Tables.customer _, graft.model.Tables.supplier _,
-      graft.model.Tables.part _, graft.model.Tables.nation _,
-      graft.model.Tables.region _).foreach(t => t(spark, sfDir).count())
+    def boot(): Unit = {
+      Driver.clearState(spark)
+      graft.ops.IncomeKernel.servingIncome(spark, sfDir).count()
+      Seq(Tables.customer _, Tables.supplier _, Tables.part _, Tables.nation _,
+        Tables.region _).foreach(t => t(spark, sfDir).count())
+    }
+    boot()
 
     // STORED-INDEX SERVE ROWS (round-10): build each index artifact ONCE
     // at boot (the offline job a serving fleet never re-runs), then time
@@ -95,9 +77,9 @@ object ServeBench {
     import org.apache.spark.sql.functions.col
     import graft.operators.{IndexOps, SimilarityOps}
     val ixRoot = graft.ops.ProcessTmp.dir("graft_servebench_ix")
-    val docsAll = graft.model.Tables.documents(spark, sfDir)
+    val docsAll = Tables.documents(spark, sfDir)
     val isBatch = col("doc_id") % 10 < 2
-    val emb = SimilarityOps.embeddings(spark, sfDir)
+    val emb = Tables.embeddings(spark, sfDir)
     IndexOps.buildBm25Index(docsAll, s"$ixRoot/bm25")
     IndexOps.buildDedupIndex(docsAll.where(!isBatch), s"$ixRoot/dedup")
     IndexOps.buildGraphIndex(spark, sfDir, s"$ixRoot/graph")
@@ -124,11 +106,7 @@ object ServeBench {
     // session's boot state (dims + income) so the timed window starts from
     // the same long-lived-server posture the pipe warm established.
     ixServes.foreach { case (_, fn) => fn(spark, sfDir).count() }
-    spark.sharedState.cacheManager.clearCache()
-    graft.ops.IncomeKernel.servingIncome(spark, sfDir).count()
-    Seq(graft.model.Tables.customer _, graft.model.Tables.supplier _,
-      graft.model.Tables.part _, graft.model.Tables.nation _,
-      graft.model.Tables.region _).foreach(t => t(spark, sfDir).count())
+    boot()
 
     // Work queue: every pipe + index serve `rounds` times, deterministically
     // shuffled so threads interleave different requests rather than
@@ -165,7 +143,7 @@ object ServeBench {
     workers.foreach(_.start())
     workers.foreach(_.join())
     val wallSec = (System.nanoTime() - t0) / 1e9
-    val sentinelPost = sentinelMs()
+    val sentinelPost = Driver.sentinelMs(spark)
 
     import scala.jdk.CollectionConverters._
     val all = lat.asScala.toSeq

@@ -1,25 +1,17 @@
 package graft
-import org.apache.spark.sql.SparkSession
 /** Dev tool: time named queries 3x each in one warm session at sf0.1 —
   * separates first-call codegen/JIT cost from steady-state runtime.
   * Usage: runMain graft.TimeQ <queryName> [...]
   */
 object TimeQ {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    // SPARK_GRAFT_NOAQE=1 times the static plan — isolates AQE runtime
-    // re-planning (coalesce/broadcast demotion) when a wall looks odd.
-    if (sys.env.get("SPARK_GRAFT_NOAQE").contains("1"))
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
     // SPARK_GRAFT_CONF="k=v;k=v" sets arbitrary session confs — for
-    // bisecting which runtime knob owns an anomaly.
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").filter(_.contains("="))
-      .foreach { kv => val Array(k, v) = kv.split("=", 2); spark.conf.set(k, v) })
+    // bisecting which runtime knob owns an anomaly (e.g.
+    // spark.sql.adaptive.enabled=false times the static plan).
+    val confs = sys.env.get("SPARK_GRAFT_CONF").toSeq
+      .flatMap(_.split(";").filter(_.contains("=")))
+      .map { kv => val Array(k, v) = kv.split("=", 2); k -> v }
+    val spark = Driver.session(confs: _*)
     spark.range(1000).selectExpr("sum(id)").collect()
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // SPARK_GRAFT_WARM=1 applies Bench's exact pre-timing warm, so run1
@@ -37,20 +29,11 @@ object TimeQ {
       val fn = SparkEntry.queries(name)
       for (i <- 1 to 3) {
         val t0 = System.nanoTime()
-        if (full)
-          fn(spark, dir).queryExecution.toRdd.foreachPartition { it =>
-            while (it.hasNext) it.next()
-          }
-        else fn(spark, dir).count()
+        if (full) Driver.evaluate(fn(spark, dir)) else fn(spark, dir).count()
         println(f"$name run$i: ${(System.nanoTime()-t0)/1e9}%.2f s")
         // SPARK_GRAFT_COLD=1 measures each run cache-cold like Bench does
         // (run2+ still benefit from JIT warmth — the steady-state signal).
-        // Mirror Bench exactly: localCheckpoint blocks are RDD persistence,
-        // not SQL cache — left persisted they accumulate memory across runs.
-        if (sys.env.get("SPARK_GRAFT_COLD").contains("1")) {
-          spark.sharedState.cacheManager.clearCache()
-          spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-        }
+        if (sys.env.get("SPARK_GRAFT_COLD").contains("1")) Driver.clearState(spark)
       }
     }
     spark.stop()

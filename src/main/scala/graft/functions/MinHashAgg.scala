@@ -2,7 +2,6 @@ package graft.functions
 
 import java.nio.ByteBuffer
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -93,15 +92,4 @@ case class MinHashAgg(
     copy(inputAggBufferOffset = newOffset)
   override protected def withNewChildInternal(newChild: Expression): MinHashAgg =
     copy(child = newChild)
-}
-
-object MinHashAgg {
-  /** Register `minhash_sig(x)` (with the library's fixed hash family) in
-    * the session function registry; the analyzer wraps the aggregate.
-    */
-  def register(spark: SparkSession, params: Seq[(Long, Long)], prime: Long): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash_sig",
-      (exprs: Seq[Expression]) => MinHashAgg(exprs.head, params, prime),
-      "scala_udf")
 }

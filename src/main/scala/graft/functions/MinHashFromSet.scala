@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -115,17 +114,4 @@ case class MinHashFromSet(
 
   override protected def withNewChildInternal(newChild: Expression): MinHashFromSet =
     copy(child = newChild)
-}
-
-object MinHashFromSet {
-  /** Idempotently register `minhash_from_set` with a fixed hash family. */
-  def register(spark: SparkSession, params: Seq[(Long, Long)], prime: Long): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash_from_set",
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 1,
-          s"minhash_from_set expects exactly 1 argument, got ${exprs.length}")
-        MinHashFromSet(exprs.head, params, prime)
-      },
-      "scala_udf")
 }

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.{bloomFilterAgg, mightContain, minhashFromSet, minhashSig}
 import graft.model.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -49,24 +50,6 @@ object DedupOps {
 
   private[graft] def shingles(docs: DataFrame): DataFrame =
     explodedShingles(docs).distinct()
-
-  /** The SAME per-doc distinct shingle set as [[shingleSetsOnePass]], as a
-    * PURE PROJECTION (array_distinct over a transform) — zero exchanges,
-    * but the fingerprinting runs in higher-order-function lambdas
-    * (interpreted, not codegen). Measured at the 100k-doc rehearsal this
-    * costs ~4x the wall of the explode→collect_set form even though that
-    * one shuffles — kept as the documented (and spec-pinned, vs
-    * [[shingleSetsOnePass]]) twin so the trade stays measured, NOT as a
-    * recommended path. See [[nsDecontaminate]]'s scaladoc for numbers.
-    */
-  private[operators] def arrayShingles(docs: DataFrame): DataFrame =
-    docs
-      .withColumn("w", split(lower(col("text")), " "))
-      .where(size(col("w")) >= 3)
-      .select(col("doc_id"), array_distinct(expr(
-        "transform(sequence(0, size(w)-3), i -> " +
-          "CAST(conv(substring(sha2(concat_ws(' ', w[i], w[i+1], w[i+2]), 256), 1, 15), 16, 10) AS BIGINT))"))
-        .as("shs"))
 
   /** Exact Jaccard over pairs that share >=1 shingle. The shingle
     * equality join IS the candidate pruning: disjoint docs never meet —
@@ -173,8 +156,7 @@ object DedupOps {
     * not duplicate a non-trivial expression into its 32 consumers.
     */
   private[operators] def signaturesFromSets(sets: DataFrame): DataFrame = {
-    graft.functions.MinHashFromSet.register(sets.sparkSession, hashParams, Prime)
-    sets.select(col("doc_id"), expr("minhash_from_set(shs)").as("_sig"))
+    sets.select(col("doc_id"), minhashFromSet(col("shs")).as("_sig"))
       .select(col("doc_id") +:
         (0 until NumHashes).map(i => col("_sig")(i).as(s"h$i")): _*)
   }
@@ -218,10 +200,9 @@ object DedupOps {
     * satisfy the same oracle.
     */
   private[operators] def minhashSignaturesNative(sh0: DataFrame): DataFrame = {
-    graft.functions.MinHashAgg.register(sh0.sparkSession, hashParams, Prime)
     sh0
       .withColumn("x", col("sh").bitwiseAND(0xffffffffL))
-      .groupBy("doc_id").agg(expr("minhash_sig(x)").as("sig"))
+      .groupBy("doc_id").agg(minhashSig(col("x")).as("sig"))
       .select(col("doc_id") +: (0 until NumHashes).map(i => col("sig")(i).as(s"h$i")): _*)
   }
 
@@ -1075,16 +1056,15 @@ object DedupOps {
     * centroid collects in [[SimilarityOps]]).
     */
   def nsDecontaminateBloom(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.BloomProbe.register(spark)
     val docs = Tables.documents(spark, dir)
     val evalSh = shingles(docs.where(col("doc_id") % 50 === 0))
       .select("sh").distinct()
     val corpusSh = shingles(docs.where(col("doc_id") % 50 =!= 0))
     val bloomBytes: Array[Byte] = evalSh
-      .agg(expr(s"bloom_filter_agg(xxhash64(sh), ${BloomItems}L, ${BloomBits}L)"))
+      .agg(bloomFilterAgg(xxhash64(col("sh")), BloomItems, BloomBits))
       .head.getAs[Array[Byte]](0)
     val candidates = corpusSh
-      .where(call_function("might_contain", lit(bloomBytes), xxhash64(col("sh"))))
+      .where(mightContain(bloomBytes, xxhash64(col("sh"))))
     val card = corpusSh.groupBy("doc_id").agg(count(lit(1)).as("n_shingles"))
     candidates.join(evalSh.hint("MERGE"), "sh")
       .groupBy("doc_id").agg(count(lit(1)).as("n_common"))

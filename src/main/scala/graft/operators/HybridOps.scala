@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.cosineSim
 import graft.model.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -37,12 +38,12 @@ object HybridOps {
     * (round(cos, 4), id tie-break) with the BM25 query cadence.
     */
   private def denseTopk(spark: SparkSession, dir: String): DataFrame = {
-    val emb = SimilarityOps.embeddings(spark, dir)
+    val emb = Tables.embeddings(spark, dir)
     val queries = emb.where(col("vec_id") % TextOps.BmQueryEvery === 0)
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
     val cands = emb.select(col("vec_id").as("doc_id"), col("embedding").as("c_emb"))
     broadcast(queries).join(cands, col("query_id") =!= col("doc_id"))
-      .withColumn("cos", round(expr("cosine_sim(q_emb, c_emb)"), 4))
+      .withColumn("cos", round(cosineSim(col("q_emb"), col("c_emb")), 4))
       .withColumn("dense_rnk", row_number().over(
         Window.partitionBy("query_id").orderBy(col("cos").desc, col("doc_id").asc))
         .cast("long"))
@@ -51,7 +52,7 @@ object HybridOps {
   }
 
   def nsTextHybridRrf(spark: SparkSession, dir: String): DataFrame = {
-    val embIds = SimilarityOps.embeddings(spark, dir)
+    val embIds = Tables.embeddings(spark, dir)
       .select(col("vec_id").as("query_id"))
     // Lexical side restricted to queries the dense side also covers —
     // RRF fuses the retrievers' lists for the SHARED query set.

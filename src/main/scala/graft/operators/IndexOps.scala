@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.cosineSim
 import graft.model.Tables
 import graft.ops.{MergeSink, ProcessTmp}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -230,7 +231,6 @@ object IndexOps {
     */
   def updateIvfIndex(emb: DataFrame, root: String): Unit = {
     val spark = emb.sparkSession
-    graft.functions.CosineSimilarity.register(spark)
     val cents = spark.read.parquet(s"$root/centroids")
       .select(col("cent_id").cast("int"), col("embedding"))
       .collect().map(r => (r.getInt(0), r.getSeq[Double](1).toArray)).sortBy(_._1)
@@ -255,7 +255,6 @@ object IndexOps {
     * lists' files.
     */
   def queryIvfIndex(spark: SparkSession, root: String): DataFrame = {
-    graft.functions.CosineSimilarity.register(spark)
     val cents = spark.read.parquet(s"$root/centroids")
       .select(col("cent_id").cast("int"), col("embedding"))
       .collect().map(r => (r.getInt(0), r.getSeq[Double](1).toArray)).sortBy(_._1)
@@ -322,8 +321,6 @@ object IndexOps {
     */
   def updateIvfPqIndex(emb: DataFrame, root: String): Unit = {
     val spark = emb.sparkSession
-    graft.functions.DotProduct.register(spark)
-    graft.functions.CosineSimilarity.register(spark)
     val cents = readCentroids(spark, root)
     val books = readCodebooks(spark, root)
     val codeCols = (0 until SimilarityOps.PqSubspaces)
@@ -348,8 +345,6 @@ object IndexOps {
     * [[SimilarityOps.ivfPqAdcSearch]] stage.
     */
   def queryIvfPqIndex(spark: SparkSession, root: String, queries: DataFrame): DataFrame = {
-    graft.functions.DotProduct.register(spark)
-    graft.functions.CosineSimilarity.register(spark)
     val cents = readCentroids(spark, root)
     val books = readCodebooks(spark, root)
     val stored = spark.read.parquet(s"$root/codes")
@@ -392,7 +387,7 @@ object IndexOps {
     */
   def buildGraphIndex(spark: SparkSession, dir: String, root: String,
       nodeFilter: Column = lit(true), pinnedEf: Option[Int] = None): Unit = {
-    val nodes = SimilarityOps.embeddings(spark, dir).where(nodeFilter)
+    val nodes = Tables.embeddings(spark, dir).where(nodeFilter)
     val b = ArtifactMeta.bucketsFor(nodes.count())
     val edges = SimilarityOps.beamGraphEdgesFrom(nodes)
     // Tune ef AT THIS INDEX'S SCALE on the just-built edges (one truth
@@ -451,7 +446,7 @@ object IndexOps {
   def updateGraphIndex(spark: SparkSession, dir: String, root: String,
       isBatch: Column): Unit = {
     val graphBuckets = ArtifactMeta.readBuckets(spark, root, "edges")
-    val emb = SimilarityOps.embeddings(spark, dir)
+    val emb = Tables.embeddings(spark, dir)
     val batchQ = emb.where(isBatch)
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
     val storedEf = ArtifactMeta.readLong(spark, root, "beam_ef").toInt
@@ -470,7 +465,7 @@ object IndexOps {
     val rebuilt = old.join(touchedSrc, Seq("src_id"), "left_semi")
       .unionByName(newEdges).distinct()
       .join(embA, "src_id").join(embB, "nbr_id")
-      .withColumn("cos", round(expr("cosine_sim(ea, eb)"), 4))
+      .withColumn("cos", round(cosineSim(col("ea"), col("eb")), 4))
       .withColumn("_rn", row_number().over(w))
       .where(col("_rn") <= SimilarityOps.BeamMaxDegree)
       .select("src_id", "nbr_id")
@@ -679,9 +674,9 @@ object IndexOps {
 
   private def ivfAt(spark: SparkSession, dir: String, forceBuild: Boolean): DataFrame = {
     val root = rootFor("ivf", dir)
-    if (forceBuild) buildIvfIndex(SimilarityOps.embeddings(spark, dir), root)
+    if (forceBuild) buildIvfIndex(Tables.embeddings(spark, dir), root)
     else ensureBuilt(spark, root)(
-      buildIvfIndex(SimilarityOps.embeddings(spark, dir), root))
+      buildIvfIndex(Tables.embeddings(spark, dir), root))
     queryIvfIndex(spark, root)
   }
   def nsSimIvfIndexBuild(spark: SparkSession, dir: String): DataFrame =
@@ -691,7 +686,7 @@ object IndexOps {
 
   private def ivfPqAt(spark: SparkSession, dir: String, forceBuild: Boolean): DataFrame = {
     val root = rootFor("ivfpq", dir)
-    val emb = SimilarityOps.embeddings(spark, dir)
+    val emb = Tables.embeddings(spark, dir)
     if (forceBuild) buildIvfPqIndex(emb, root)
     else ensureBuilt(spark, root)(buildIvfPqIndex(emb, root))
     queryIvfPqIndex(spark, root,

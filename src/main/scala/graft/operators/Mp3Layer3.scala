@@ -89,10 +89,6 @@ object Mp3L3Codecs {
   val Imdct36Q30: Array[Array[Long]] = Array.tabulate(36, 18) { (i, k) =>
     Math.round(StrictMath.cos(StrictMath.PI / 72.0 * (2 * i + 1 + 18) * (2 * k + 1)) * (1L << 30))
   }
-  /** 12-point IMDCT for the three short windows. */
-  val Imdct12Q30: Array[Array[Long]] = Array.tabulate(12, 6) { (i, k) =>
-    Math.round(StrictMath.cos(StrictMath.PI / 24.0 * (2 * i + 1 + 6) * (2 * k + 1)) * (1L << 30))
-  }
   val Win36Q30: Array[Long] = Array.tabulate(36)(i =>
     Math.round(StrictMath.sin(StrictMath.PI / 36.0 * (i + 0.5)) * (1L << 30)))
   val Win12Q30: Array[Long] = Array.tabulate(12)(i =>
@@ -703,8 +699,6 @@ object Mp3L3Fixtures {
       s"fixture bit accounting drifted: ${bb.length} != ${part2 + part3}")
     bb
   }
-
-  def part23Of(d: Long, f: Int, g: Int): Int = granuleBits(d, f, g, scfsiOf(d, f)).length
 
   def mp3l3(d: Long): Array[Byte] = {
     val nf = nFrames(d)

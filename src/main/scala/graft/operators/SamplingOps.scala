@@ -192,11 +192,12 @@ object SamplingOps {
     * source (the local per-(source, partition) top-cap pre-prune,
     * performed by the physical planner), and the per-source merge task
     * ranks ≤ cap × partitions rows — bounded metadata-scale input, not
-    * doc rows. MEASURED against the explicit two-level pre-prune
-    * ([[sourceCapRanked]]) on a 70 %-one-source mix
-    * (`ScaleRehearsal source_cap`): the window form shuffles 0.1 MB at
-    * 32M rows and wins at every scale (0.46/0.61/2.30 s vs
-    * 0.83/0.83/2.71 s at 2M/8M/32M) because the explicit first-level
+    * doc rows. MEASURED against an explicit two-level pre-prune (local
+    * top-cap per (source, sample-key range), then the global rank; since
+    * removed, table in docs/PLANS.md round 14) on a 70 %-one-source mix:
+    * the window form shuffles 0.1 MB at 32M rows and wins at every scale
+    * (0.46/0.61/2.30 s vs 0.83/0.83/2.71 s at 2M/8M/32M) because the
+    * explicit first-level
     * window multiplies the partial prune's group count by the range
     * count (42 MB shuffled). The plan rule + WindowGroupLimit spec pin
     * the bounded shape structurally; quota-COLUMN selections (mixes,
@@ -220,30 +221,6 @@ object SamplingOps {
       .where(col("src_rank") <= SourceCap)
       .orderBy("source", "src_rank")
   }
-
-  /** The EXPLICIT two-level per-source quality rank (local top-cap per
-    * (source, sample-key range), then the global rank over the bounded
-    * remainder) — byte-identical to the single-window form (spec-pinned
-    * on a skewed fixture) but MEASURED SLOWER and shuffle-heavier than
-    * it, because WindowGroupLimit already performs the local prune at
-    * cap × |sources| rows per partition while this form's first level
-    * prunes at cap × |sources| × ranges (`ScaleRehearsal source_cap`
-    * table in docs/PLANS.md round 14). Kept as the recorded alternative
-    * and the rehearsal subject; [[nsCorpusSourceCap]] registers the
-    * winning form.
-    */
-  private[graft] def sourceCapRanked(scored: DataFrame): DataFrame =
-    scored
-      .withColumn("_rg", expr(
-        s"pmod(doc_id * $SampleKeyA + $SampleKeyB, $SampleKeyP) div $SampleRangeWidth"))
-      .withColumn("_local_rank",
-        row_number().over(Window.partitionBy("source", "_rg")
-          .orderBy(col("q_u").desc, col("doc_id").asc)))
-      .where(col("_local_rank") <= SourceCap)
-      .withColumn("src_rank",
-        row_number().over(Window.partitionBy("source")
-          .orderBy(col("q_u").desc, col("doc_id").asc)).cast("long"))
-      .drop("_rg", "_local_rank")
 
   // ---- DSIR importance resampling -----------------------------------------
 

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.functions.{CosineSimilarity, DotProduct}
+import graft.functions.{cosineSim, dotProduct}
 import graft.model.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -24,17 +24,11 @@ object SimilarityOps {
   private[operators] val TopK = 3
   private[operators] val NumQueries = 100
 
-  private[graft] def embeddings(spark: SparkSession, dir: String): DataFrame = {
-    CosineSimilarity.register(spark)
-    DotProduct.register(spark)
-    Tables.embeddings(spark, dir)
-  }
-
   /** Exact brute-force top-k neighbors for the first `NumQueries` vectors.
     * Query side is broadcast; candidates stream through codegen'd cosine.
     */
   def nsSimBruteforceTopk(spark: SparkSession, dir: String): DataFrame =
-    bruteforceTopk(embeddings(spark, dir))
+    bruteforceTopk(Tables.embeddings(spark, dir))
 
   /** The exact search as a frame transform — shared by the query above
     * and the [[probesForRecall]] tuning loop (which needs ground truth on
@@ -47,7 +41,7 @@ object SimilarityOps {
     val w = Window.partitionBy("query_id")
       .orderBy(col("cos").desc, col("neighbor_id").asc)
     broadcast(queries).join(cands, col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos", round(expr("cosine_sim(q_emb, c_emb)"), 4))
+      .withColumn("cos", round(cosineSim(col("q_emb"), col("c_emb")), 4))
       .withColumn("rank", row_number().over(w).cast("long"))
       .where(col("rank") <= TopK)
       .select("query_id", "rank", "neighbor_id", "cos")
@@ -61,13 +55,13 @@ object SimilarityOps {
     * (SimilaritySpec), not the deliverable scale path.
     */
   def nsSimNeardupPairs(spark: SparkSession, dir: String): DataFrame = {
-    val emb = embeddings(spark, dir)
+    val emb = Tables.embeddings(spark, dir)
     val a = emb.select(col("vec_id").as("vec_a"), col("embedding").as("emb_a"),
       col("label").as("label_a"))
     val b = emb.select(col("vec_id").as("vec_b"), col("embedding").as("emb_b"),
       col("label").as("label_b"))
     a.join(b, col("vec_a") < col("vec_b"))
-      .withColumn("cos", round(expr("cosine_sim(emb_a, emb_b)"), 4))
+      .withColumn("cos", round(cosineSim(col("emb_a"), col("emb_b")), 4))
       .where(col("cos") >= 0.35)
       .select(col("vec_a"), col("vec_b"), col("cos"),
         (col("label_a") === col("label_b")).as("same_label"))
@@ -101,8 +95,6 @@ object SimilarityOps {
   /** Sign-pattern signature: bit p = (v · plane_p) > 0, banded into
     * `LshBands` bucket ids.
     */
-  private[graft] def lshBucketsPublic(emb: DataFrame): DataFrame = lshBuckets(emb)
-
   private[operators] def lshBuckets(emb: DataFrame): DataFrame = {
     val planeLits = planes.map(p => array(p.map(lit): _*))
     // Codegen'd dot_product (one fused loop per plane) replaces the
@@ -110,7 +102,7 @@ object SimilarityOps {
     // accumulation, so the sign bits (and the DuckDB oracle) are
     // bit-identical; DotProductSpec pins the equivalence.
     val bits = planeLits.zipWithIndex.map { case (pl, i) =>
-      when(expr(s"dot_product(embedding, _plane$i)") > 0, 1L).otherwise(0L)
+      when(dotProduct(col("embedding"), col(s"_plane$i")) > 0, 1L).otherwise(0L)
         .as(s"bit$i")
     }
     val withPlanes = planeLits.zipWithIndex
@@ -136,7 +128,7 @@ object SimilarityOps {
     * left-to-right in doubles); LshSpec checks recall vs brute force.
     */
   def nsSimLshTopk(spark: SparkSession, dir: String): DataFrame = {
-    val emb = embeddings(spark, dir)
+    val emb = Tables.embeddings(spark, dir)
     val buckets = lshBuckets(emb)
     // Renamed columns on each side avoid self-join attribute ambiguity.
     // Candidate generation and dedup run on (id, id) pairs ONLY — the
@@ -162,7 +154,7 @@ object SimilarityOps {
     val w = Window.partitionBy("query_id")
       .orderBy(col("cos").desc, col("neighbor_id").asc)
     cands
-      .withColumn("cos", round(expr("cosine_sim(q_emb, c_emb)"), 4))
+      .withColumn("cos", round(cosineSim(col("q_emb"), col("c_emb")), 4))
       .withColumn("rank", row_number().over(w).cast("long"))
       .where(col("rank") <= TopK)
       .select("query_id", "rank", "neighbor_id", "cos")
@@ -179,7 +171,7 @@ object SimilarityOps {
     * SimilaritySpec.
     */
   def nsSimNeardupLsh(spark: SparkSession, dir: String): DataFrame = {
-    val emb = embeddings(spark, dir)
+    val emb = Tables.embeddings(spark, dir)
     val buckets = lshBuckets(emb).select("vec_id", "band", "bucket")
     val a = buckets.select(col("vec_id").as("vec_a"),
       col("band").as("a_band"), col("bucket").as("a_bucket"))
@@ -195,7 +187,7 @@ object SimilarityOps {
     val eb = emb.select(col("vec_id").as("vec_b"),
       col("embedding").as("emb_b"), col("label").as("label_b"))
     cand.join(ea, "vec_a").join(eb, "vec_b")
-      .withColumn("cos", round(expr("cosine_sim(emb_a, emb_b)"), 4))
+      .withColumn("cos", round(cosineSim(col("emb_a"), col("emb_b")), 4))
       .where(col("cos") >= 0.35)
       .select(col("vec_a"), col("vec_b"), col("cos"),
         (col("label_a") === col("label_b")).as("same_label"))
@@ -244,7 +236,7 @@ object SimilarityOps {
     */
   private[operators] def knnRankedEdges(
       spark: SparkSession, dir: String, cap: Int): DataFrame =
-    knnRankedEdgesFrom(embeddings(spark, dir), cap)
+    knnRankedEdgesFrom(Tables.embeddings(spark, dir), cap)
 
   private[operators] def knnRankedEdgesFrom(
       emb: DataFrame, cap: Int): DataFrame = {
@@ -282,7 +274,7 @@ object SimilarityOps {
     val w = Window.partitionBy("src_id")
       .orderBy(col("cos").desc, col("nbr_id").asc)
     cand.join(ea, "src_id").join(eb, "nbr_id")
-      .withColumn("cos", round(expr("cosine_sim(emb_a, emb_b)"), 4))
+      .withColumn("cos", round(cosineSim(col("emb_a"), col("emb_b")), 4))
       .withColumn("rank", row_number().over(w).cast("long"))
       .where(col("rank") <= GraphK)
       .select("src_id", "rank", "nbr_id", "cos")
@@ -349,7 +341,7 @@ object SimilarityOps {
     * build-and-walk query.
     */
   private[operators] def beamGraphEdges(spark: SparkSession, dir: String): DataFrame =
-    beamGraphEdgesFrom(embeddings(spark, dir))
+    beamGraphEdgesFrom(Tables.embeddings(spark, dir))
 
   private[graft] def beamGraphEdgesFrom(
       emb: DataFrame, rounds: Int = NnDescentRounds): DataFrame = {
@@ -361,7 +353,7 @@ object SimilarityOps {
         .distinct()
     def rescoreTop(cand: DataFrame, k: Int): DataFrame =
       cand.join(embA, "src_id").join(embB, "nbr_id")
-        .withColumn("cos", round(expr("cosine_sim(ea, eb)"), 4))
+        .withColumn("cos", round(cosineSim(col("ea"), col("eb")), 4))
         .withColumn("_rn", row_number().over(w))
         .where(col("_rn") <= k)
         .select("src_id", "nbr_id")
@@ -417,7 +409,7 @@ object SimilarityOps {
   private[graft] def graphBeam(
       spark: SparkSession, dir: String, ef: Int, hops: Int,
       edges: DataFrame): DataFrame = {
-    val emb = embeddings(spark, dir)
+    val emb = Tables.embeddings(spark, dir)
     graphBeamFor(spark, dir, ef, hops, edges,
       emb.where(col("vec_id") < NumQueries)
         .select(col("vec_id").as("query_id"), col("embedding").as("q_emb")),
@@ -436,7 +428,7 @@ object SimilarityOps {
       spark: SparkSession, dir: String, ef: Int, hops: Int,
       edges: DataFrame, queries: DataFrame, nodeFilter: Column,
       k: Int): DataFrame = {
-    val emb = embeddings(spark, dir)
+    val emb = Tables.embeddings(spark, dir)
     val w = Window.partitionBy("query_id")
       .orderBy(col("cos").desc, col("node").asc)
     // Layer-1 descent: one exact pass over the coarse subset per query,
@@ -451,7 +443,7 @@ object SimilarityOps {
     val layer1 = emb.where(nodeFilter && col("vec_id") % BeamCoarse === 0)
       .select(col("vec_id").as("node"), col("embedding").as("c_emb"))
     var beam = layer1.crossJoin(broadcast(queries))
-      .withColumn("cos", round(expr("cosine_sim(q_emb, c_emb)"), 4))
+      .withColumn("cos", round(cosineSim(col("q_emb"), col("c_emb")), 4))
       .withColumn("_rn", row_number().over(w))
       .where(col("_rn") <= ef)
       .select("query_id", "node", "cos")
@@ -476,7 +468,7 @@ object SimilarityOps {
       beam = cand
         .join(embN, "node")
         .join(broadcast(queries), "query_id")
-        .withColumn("cos", round(expr("cosine_sim(q_emb, c_emb)"), 4))
+        .withColumn("cos", round(cosineSim(col("q_emb"), col("c_emb")), 4))
         .withColumn("_rn", row_number().over(w))
         .where(col("_rn") <= ef)
         .select("query_id", "node", "cos")
@@ -509,7 +501,7 @@ object SimilarityOps {
   private[graft] def tuneEfOn(spark: SparkSession, dir: String,
       target: Double, edges: DataFrame, nodeFilter: Column,
       candidates: Seq[Int]): (Int, Double) = {
-    val universe = embeddings(spark, dir).where(nodeFilter)
+    val universe = Tables.embeddings(spark, dir).where(nodeFilter)
     val truth = bruteforceTopk(universe)
       .select("query_id", "neighbor_id")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -540,7 +532,7 @@ object SimilarityOps {
 
   def efForRecall(spark: SparkSession, dir: String, target: Double,
       candidates: Seq[Int] = Seq(4, 8, 16, 32)): (Int, Seq[(Int, Double)]) = {
-    val truth = bruteforceTopk(embeddings(spark, dir))
+    val truth = bruteforceTopk(Tables.embeddings(spark, dir))
       .select("query_id", "neighbor_id")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     // ONE graph build for the whole tuning sweep: the navigable graph is
@@ -588,7 +580,7 @@ object SimilarityOps {
     * DISTRIBUTED (ranks are a frame, never collected to the driver).
     */
   def nsSimPagerank(spark: SparkSession, dir: String): DataFrame = {
-    val emb = embeddings(spark, dir)
+    val emb = Tables.embeddings(spark, dir)
     val edges = knnRankedEdges(spark, dir, LshBucketCap)
       .select("src_id", "nbr_id").localCheckpoint()
     val nodes = emb.select(col("vec_id")).localCheckpoint()
@@ -681,7 +673,7 @@ object SimilarityOps {
     broadcast(qs).join(cands, col("query_id") =!= col("neighbor_id"))
       // Integer dot via the codegen expression — exact (LONG), no HOF
       // allocation in the O(Q·N) hot loop.
-      .withColumn("qdot", expr("dot_product(q_qv, c_qv)"))
+      .withColumn("qdot", dotProduct(col("q_qv"), col("c_qv")))
       .select("query_id", "neighbor_id", "qdot")
   }
 
@@ -694,7 +686,7 @@ object SimilarityOps {
   def nsSimQuantTopk(spark: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy("query_id")
       .orderBy(col("qdot").desc, col("neighbor_id").asc)
-    quantScores(embeddings(spark, dir))
+    quantScores(Tables.embeddings(spark, dir))
       .withColumn("rank", row_number().over(w).cast("long"))
       .where(col("rank") <= TopK)
       .select("query_id", "rank", "neighbor_id", "qdot")
@@ -710,7 +702,7 @@ object SimilarityOps {
     * full vectors for shortlist ids only.
     */
   def nsSimQuantRerank(spark: SparkSession, dir: String): DataFrame = {
-    val emb = embeddings(spark, dir)
+    val emb = Tables.embeddings(spark, dir)
     val wQ = Window.partitionBy("query_id")
       .orderBy(col("qdot").desc, col("neighbor_id").asc)
     val shortlist = quantScores(emb)
@@ -725,7 +717,7 @@ object SimilarityOps {
     shortlist
       .join(broadcast(qEmb), "query_id")
       .join(cEmb, "neighbor_id")
-      .withColumn("cos", round(expr("cosine_sim(q_emb, c_emb)"), 4))
+      .withColumn("cos", round(cosineSim(col("q_emb"), col("c_emb")), 4))
       .withColumn("rank", row_number().over(wR).cast("long"))
       .where(col("rank") <= TopK)
       .select("query_id", "rank", "neighbor_id", "cos")
@@ -798,7 +790,7 @@ object SimilarityOps {
     */
   private[operators] def centroidRanking(cents: Seq[(Int, Column)]): Column = {
     val scored = array(cents.map { case (cid, cv) =>
-      struct(round(call_function("cosine_sim", col("embedding"), cv), 4).as("ccos"),
+      struct(round(cosineSim(col("embedding"), cv), 4).as("ccos"),
         lit(cid).as("cent_id"))
     }: _*)
     array_sort(scored, (l, r) =>
@@ -908,7 +900,7 @@ object SimilarityOps {
       .orderBy(col("cos").desc, col("neighbor_id").asc)
     broadcast(probes).join(assign, "cluster")
       .where(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos", round(expr("cosine_sim(q_emb, c_emb)"), 4))
+      .withColumn("cos", round(cosineSim(col("q_emb"), col("c_emb")), 4))
       .withColumn("rank", row_number().over(w).cast("long"))
       .where(col("rank") <= TopK)
       .select("query_id", "rank", "neighbor_id", "cos")
@@ -921,7 +913,7 @@ object SimilarityOps {
     * checks recall vs brute force.
     */
   def nsSimIvfTopk(spark: SparkSession, dir: String): DataFrame = {
-    val emb = embeddings(spark, dir)
+    val emb = Tables.embeddings(spark, dir)
     ivfSearch(emb, centLits(seedCentroids(emb)))
   }
 
@@ -933,7 +925,7 @@ object SimilarityOps {
     * reference-free ANN story: train → index → search, all oracle-gated.
     */
   def nsSimIvfTrained(spark: SparkSession, dir: String): DataFrame = {
-    val emb = embeddings(spark, dir)
+    val emb = Tables.embeddings(spark, dir)
     ivfSearch(emb, centLits(trainCentroids(emb)))
   }
 
@@ -960,7 +952,7 @@ object SimilarityOps {
     * generated oracle with the probe constant swapped.
     */
   def nsSimIvfMultiprobe(spark: SparkSession, dir: String): DataFrame = {
-    val emb = embeddings(spark, dir)
+    val emb = Tables.embeddings(spark, dir)
     ivfSearch(emb, centLits(seedCentroids(emb)), IvfProbesHi)
   }
 
@@ -1012,7 +1004,7 @@ object SimilarityOps {
     * rank holds either way.
     */
   def nsCorpusTopics(spark: SparkSession, dir: String): DataFrame = {
-    val emb = embeddings(spark, dir)
+    val emb = Tables.embeddings(spark, dir)
     val cents = centLits(trainCentroids(emb))
     val assigned = emb.select(col("vec_id"),
       centroidRanking(cents)(0)("cent_id").cast("long").as("topic"))
@@ -1061,7 +1053,7 @@ object SimilarityOps {
     * against the exact baseline in SimilaritySpec.
     */
   def nsSimSemdedup(spark: SparkSession, dir: String): DataFrame = {
-    val emb = embeddings(spark, dir)
+    val emb = Tables.embeddings(spark, dir)
     val assign = emb
       .withColumn("cluster",
         centroidRanking(centLits(seedCentroids(emb)))(0)("cent_id").cast("long"))
@@ -1072,7 +1064,7 @@ object SimilarityOps {
       col("embedding").as("emb_b"))
     a.join(b, "cluster")
       .where(col("vec_a") < col("vec_b"))
-      .withColumn("cos", round(expr("cosine_sim(emb_a, emb_b)"), 4))
+      .withColumn("cos", round(cosineSim(col("emb_a"), col("emb_b")), 4))
       .where(col("cos") >= SemThreshold)
       .groupBy(col("cluster"), col("vec_b").as("vec_id"))
       .agg(min("vec_a").as("dup_of"), max("cos").as("max_cos"),
@@ -1093,14 +1085,13 @@ object SimilarityOps {
   private[graft] def semMatchAgainstIndex(
       batchEmb: DataFrame, indexAssign: DataFrame,
       cents: Seq[(Int, Column)]): DataFrame = {
-    CosineSimilarity.register(batchEmb.sparkSession)
     batchEmb
       .withColumn("cluster", centroidRanking(cents)(0)("cent_id").cast("long"))
       .select(col("cluster"), col("vec_id").as("batch_vec"),
         col("embedding").as("emb_a"))
       .join(indexAssign.select(col("cluster"), col("vec_id").as("index_vec"),
         col("embedding").as("emb_b")), Seq("cluster"))
-      .withColumn("cos", round(expr("cosine_sim(emb_a, emb_b)"), 4))
+      .withColumn("cos", round(cosineSim(col("emb_a"), col("emb_b")), 4))
       .where(col("cos") >= SemThreshold)
       .groupBy(col("batch_vec"))
       .agg(min("index_vec").as("dup_of"), max("cos").as("max_cos"),
@@ -1113,7 +1104,6 @@ object SimilarityOps {
     */
   private[graft] def semIndexMaterialized(
       corpusEmb: DataFrame): (Array[(Int, Array[Double])], DataFrame) = {
-    CosineSimilarity.register(corpusEmb.sparkSession)
     val cents = seedCentroids(corpusEmb)
     val assign = corpusEmb
       .withColumn("cluster", centroidRanking(centLits(cents))(0)("cent_id").cast("long"))
@@ -1128,7 +1118,6 @@ object SimilarityOps {
     */
   private[graft] def semAssign(
       emb: DataFrame, cents: Array[(Int, Array[Double])]): DataFrame = {
-    CosineSimilarity.register(emb.sparkSession)
     emb.withColumn("cluster",
       centroidRanking(centLits(cents))(0)("cent_id").cast("long"))
       .select(col("vec_id"), col("embedding"), col("cluster"))
@@ -1173,7 +1162,7 @@ object SimilarityOps {
     val sub = expr(s"slice(embedding, ${m * PqSubDim + 1}, $PqSubDim)")
     val scored = array(books(m).zipWithIndex.map { case (cv, k) =>
       struct(
-        round(call_function("dot_product", sub, typedLit(cv.toSeq))
+        round(dotProduct(sub, typedLit(cv.toSeq))
           - lit(halfSqNorm(cv)), 4).as("s"),
         lit(k).as("code"))
     }: _*)
@@ -1191,7 +1180,7 @@ object SimilarityOps {
     */
   private[operators] def adcApprox(books: Array[Array[Array[Double]]]): Column =
     round((0 until PqSubspaces).map { m =>
-      call_function("dot_product",
+      dotProduct(
         expr(s"slice(q_emb, ${m * PqSubDim + 1}, $PqSubDim)"),
         element_at(typedLit(books(m).map(_.toSeq).toSeq), col(s"c$m") + 1))
     }.reduceLeft(_ + _), 4)
@@ -1202,7 +1191,7 @@ object SimilarityOps {
     * ride along as literals exactly like the IVF centroids.
     */
   def nsSimPqTopk(spark: SparkSession, dir: String): DataFrame = {
-    val emb = embeddings(spark, dir)
+    val emb = Tables.embeddings(spark, dir)
     val books = pqCodebooks(emb)
     val codeCols = (0 until PqSubspaces).map(m => pqCodeCol(m, books).as(s"c$m"))
     val cands = emb.select(col("vec_id").as("neighbor_id") +: codeCols: _*)
@@ -1227,7 +1216,7 @@ object SimilarityOps {
     * scan side never shuffles (the probe side broadcasts).
     */
   def nsSimIvfPqTopk(spark: SparkSession, dir: String): DataFrame = {
-    val emb = embeddings(spark, dir)
+    val emb = Tables.embeddings(spark, dir)
     val books = pqCodebooks(emb)
     val ranked = emb.withColumn("_cr", centroidRanking(centLits(seedCentroids(emb))))
     val codeCols = (0 until PqSubspaces).map(m => pqCodeCol(m, books).as(s"c$m"))
@@ -1304,7 +1293,7 @@ object SimilarityOps {
     * path, all oracle-gated like [[nsSimIvfTrained]].
     */
   def nsSimPqTrained(spark: SparkSession, dir: String): DataFrame = {
-    val emb = embeddings(spark, dir)
+    val emb = Tables.embeddings(spark, dir)
     val books = trainPqBooks(emb)
     val codeCols = (0 until PqSubspaces).map(m => pqCodeCol(m, books).as(s"c$m"))
     val cands = emb.select(col("vec_id").as("neighbor_id") +: codeCols: _*)

@@ -20,15 +20,4 @@ private[operators] object SqlRewrite {
       s"SQL rewrite anchor not found (drifted source CTE?): '$anchor'")
     sql.replace(anchor, replacement)
   }
-
-  /** Strict replace additionally requiring EXACTLY `n` occurrences —
-    * for anchors whose multiplicity is part of the contract (e.g. a
-    * predicate that must patch both the target and sample arms).
-    */
-  def replaceCount(sql: String, anchor: String, replacement: String, n: Int): String = {
-    val hits = sql.sliding(anchor.length).count(_ == anchor)
-    require(hits == n,
-      s"SQL rewrite anchor matched $hits times, expected $n: '$anchor'")
-    sql.replace(anchor, replacement)
-  }
 }

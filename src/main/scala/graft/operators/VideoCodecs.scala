@@ -127,8 +127,6 @@ object VideoCodecs {
   * with 0xAB (the decoder must skip them).
   */
 object AviFixtures {
-  val AviMime = "video/x-msvideo"
-
   def width(id: Long): Int = (id % 7 + 2).toInt
   def height(id: Long): Int = (id % 5 + 2).toInt
   def nFrames(id: Long): Int = (8 + id % 9).toInt

@@ -1313,6 +1313,19 @@ object Pipelines {
     "ops_salted_sum" -> (saltedSum _),
     "ops_bucketed_join" -> (graft.ops.Skew.bucketedJoin _))
 
+  /** The validator/index/APR API endpoints among [[queries]]. The rest are
+    * ETL steps, skew operators and batch builds (corpus, platform,
+    * training, tokenizer), which a serving harness must not time as
+    * requests.
+    */
+  val endpoints: Seq[String] = Seq(
+    "pipe_index_apr_average", "pipe_lsd_wise_apr", "pipe_user_income_mev",
+    "pipe_epoch_wise_apr", "pipe_apr_between_epochs",
+    "pipe_user_income_node_runner", "pipe_average_index_apr",
+    "pipe_validator_slot_withdrawals", "pipe_top_indexes",
+    "pipe_index_epoch_apr", "pipe_income_snapshot", "pipe_leaderboard",
+    "pipe_user_income", "pipe_daily_apr")
+
   private[pipeline] val epochExpr = "CAST(floor(date_part('epoch', ts)/86400) AS BIGINT)"
 
   /** Shared income CTE chain mirroring IncomeKernel for DuckDB. */

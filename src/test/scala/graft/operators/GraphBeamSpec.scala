@@ -74,7 +74,7 @@ class GraphBeamSpec extends SparkSpec {
     // Resolved view of the group-replace adjacency log (superseded
     // generations are not part of the graph).
     val edges = IndexOps.readGraphEdges(spark, root).localCheckpoint()
-    val batchIds = SimilarityOps.embeddings(spark, sfDir).where(isBatch)
+    val batchIds = graft.model.Tables.embeddings(spark, sfDir).where(isBatch)
       .select("vec_id").collect().map(_.getLong(0)).toSet
     assert(batchIds.nonEmpty)
     // the M_max walk-cost bound survives insertion

@@ -13,12 +13,12 @@ class HybridOpsSpec extends SparkSpec {
   private def rrf(rank: Long): Long = if (rank > 0) 1000000000000L / (60 + rank) else 0L
 
   test("rrf fusion equals a Scala recompute from the two component lists") {
-    val embIds = SimilarityOps.embeddings(spark, sfDir)
+    val embIds = graft.model.Tables.embeddings(spark, sfDir)
       .select("vec_id").collect().map(_.getLong(0)).toSet
     val lex = TextOps.nsTextBm25(spark, sfDir).collect()
       .filter(r => embIds(r.getLong(0)))
       .map(r => (r.getLong(0), r.getLong(2)) -> r.getLong(1)).toMap // (q, doc) -> rnk
-    val dense = SimilarityOps.embeddings(spark, sfDir)
+    val dense = graft.model.Tables.embeddings(spark, sfDir)
       .select("vec_id", "embedding").collect()
       .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray)
     val queries = dense.filter(_._1 % 50 == 0)

@@ -64,7 +64,7 @@ class IndexOpsSpec extends SparkSpec {
 
   test("incremental ivf update converges to a full assign under the same model") {
     import graft.model.Tables
-    val emb = SimilarityOps.embeddings(spark, sfDir)
+    val emb = Tables.embeddings(spark, sfDir)
     val isBatch = col("vec_id") % 10 < 2
     val root = tmpRoot("graft_ivf_incr")
     IndexOps.buildIvfIndex(emb.where(!isBatch), root)
@@ -102,7 +102,7 @@ class IndexOpsSpec extends SparkSpec {
   }
 
   test("incremental ivfpq update converges to a full encode under the stored model") {
-    val emb = SimilarityOps.embeddings(spark, sfDir)
+    val emb = Tables.embeddings(spark, sfDir)
     val isBatch = col("vec_id") % 10 < 2
     val root = tmpRoot("graft_ivfpq_incr")
     IndexOps.buildIvfPqIndex(emb.where(!isBatch), root)
@@ -265,7 +265,7 @@ class IndexOpsSpec extends SparkSpec {
 
   test("ivf index query reads only probed clusters (partition pruning)") {
     val root = tmpRoot("graft_ivf_prune")
-    IndexOps.buildIvfIndex(SimilarityOps.embeddings(spark, sfDir), root)
+    IndexOps.buildIvfIndex(Tables.embeddings(spark, sfDir), root)
     // A single-cluster filter over the stored assignments must prune to
     // one partition directory in the scan.
     val one = spark.read.parquet(s"$root/assignments").where(col("cluster") === 3)

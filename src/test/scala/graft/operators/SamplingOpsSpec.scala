@@ -75,33 +75,6 @@ class SamplingOpsSpec extends SparkSpec {
     assert(got.groupBy(_(1)).values.forall(_.size <= SamplingOps.SourceCap))
   }
 
-  test("per-source cap: two-level pre-prune equals the single-window form on a skewed mix") {
-    import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.expressions.Window
-    // One source owns ~70 % of the rows (the crawl-top-domain shape the
-    // pre-prune exists for), and q_u is drawn from only 1000 values so
-    // rank tiebreaks (q_u DESC, doc_id ASC) are exercised densely.
-    val scored = spark.range(200000).select(
-      col("id").as("doc_id"),
-      when(pmod(hash(col("id") * 13), lit(10)) < 7, lit("hot"))
-        .otherwise(concat(lit("s"), pmod(hash(col("id") * 29), lit(4)).cast("string")))
-        .as("source"),
-      (pmod(hash(col("id") * 11), lit(200)) + 1).cast("long").as("n_words"),
-      pmod(hash(col("id") * 7), lit(1000)).cast("long").as("q_u"))
-      .cache()
-    val got = SamplingOps.sourceCapRanked(scored)
-      .where(col("src_rank") <= SamplingOps.SourceCap)
-      .orderBy("source", "src_rank").collect().map(_.toSeq).toSeq
-    val want = scored
-      .withColumn("src_rank", row_number().over(Window.partitionBy("source")
-        .orderBy(col("q_u").desc, col("doc_id").asc)).cast("long"))
-      .where(col("src_rank") <= SamplingOps.SourceCap)
-      .orderBy("source", "src_rank").collect().map(_.toSeq).toSeq
-    assert(got.nonEmpty && got == want,
-      "pre-pruned per-source rank diverges from the single-window form")
-    scored.unpersist()
-  }
-
   test("per-source cap plan: rank filter pushes map-side as WindowGroupLimit") {
     val plans = collectAllPlans(
       SamplingOps.nsCorpusSourceCap(spark, sfDir).queryExecution.executedPlan)

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
-import graft.functions.{CosineSimilarity, DotProduct}
+import graft.functions.{cosineSim, dotProduct}
 import org.apache.spark.sql.functions._
 
 /** Cosine/dot expression correctness + LSH recall vs exact brute force. */
@@ -9,12 +9,11 @@ class SimilaritySpec extends SparkSpec {
 
   test("dot_product is bit-identical to the left-associated HOF fold (float x double)") {
     import spark.implicits._
-    DotProduct.register(spark)
     val rng = new scala.util.Random(11)
     val vecs = Seq.fill(200)((Array.fill(64)(rng.nextFloat() - 0.5f),
       Array.fill(64)(rng.nextDouble() - 0.5)))
     val df = vecs.toDF("a", "b")
-      .withColumn("dp", expr("dot_product(a, b)"))
+      .withColumn("dp", dotProduct(col("a"), col("b")))
       .withColumn("hof", expr(
         "aggregate(zip_with(a, b, (x, y) -> CAST(x AS DOUBLE) * y), " +
           "CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"))
@@ -27,12 +26,11 @@ class SimilaritySpec extends SparkSpec {
 
   test("dot_product on integral arrays is an exact LONG") {
     import spark.implicits._
-    DotProduct.register(spark)
     val rng = new scala.util.Random(13)
     val vecs = Seq.fill(100)((Array.fill(64)(rng.nextInt(255).toLong - 127),
       Array.fill(64)(rng.nextInt(255).toLong - 127)))
     val got = vecs.toDF("a", "b")
-      .withColumn("dp", expr("dot_product(a, b)"))
+      .withColumn("dp", dotProduct(col("a"), col("b")))
       .select("dp").collect().map(_.getLong(0))
     val want = vecs.map { case (x, y) =>
       x.zip(y).map { case (a, b) => a * b }.sum
@@ -42,12 +40,11 @@ class SimilaritySpec extends SparkSpec {
 
   test("cosine_sim expression matches an independent scala computation") {
     import spark.implicits._
-    CosineSimilarity.register(spark)
     val rng = new scala.util.Random(7)
     val vecs = Seq.fill(50)((Array.fill(16)(rng.nextFloat() - 0.5f),
       Array.fill(16)(rng.nextFloat() - 0.5f)))
     val df = vecs.toDF("a", "b")
-      .withColumn("cos", expr("cosine_sim(a, b)"))
+      .withColumn("cos", cosineSim(col("a"), col("b")))
     val got = df.select("cos").collect().map(_.getDouble(0))
     val want = vecs.map { case (x, y) =>
       var dot = 0.0; var na = 0.0; var nb = 0.0
@@ -61,11 +58,10 @@ class SimilaritySpec extends SparkSpec {
 
   test("cosine_sim handles zero vectors and is 1.0 on identical vectors") {
     import spark.implicits._
-    CosineSimilarity.register(spark)
     val df = Seq(
       (Array(0f, 0f), Array(1f, 2f)),
       (Array(3f, 4f), Array(3f, 4f))).toDF("a", "b")
-      .withColumn("cos", expr("cosine_sim(a, b)"))
+      .withColumn("cos", cosineSim(col("a"), col("b")))
     val out = df.select("cos").collect().map(_.getDouble(0))
     assert(out(0) == 0.0)
     assert(math.abs(out(1) - 1.0) < 1e-12)
@@ -139,8 +135,6 @@ class SimilaritySpec extends SparkSpec {
 
   test("multi-probe IVF: recall monotone in probes; IvfProbesHi meets the 0.75 floor as the tuner's minimal answer") {
     val emb = graft.model.Tables.embeddings(spark, sfDir)
-    graft.functions.CosineSimilarity.register(spark)
-    graft.functions.DotProduct.register(spark)
     val cents = SimilarityOps.centLits(SimilarityOps.seedCentroids(emb))
     val (chosen, table) = SimilarityOps.probesForRecall(emb, cents, 0.75)
     info(s"probe/recall table: ${table.map { case (p, r) => f"$p->$r%.3f" }.mkString(", ")}")
@@ -182,7 +176,6 @@ class SimilaritySpec extends SparkSpec {
   test("PQ encoding is a pure projection — zero exchanges, codes in [0,16)") {
     import graft.model.Tables
     import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
-    graft.functions.DotProduct.register(spark)
     val emb = Tables.embeddings(spark, sfDir)
     val books = SimilarityOps.pqCodebooks(emb)
     def encode = emb.select(col("vec_id") +:
@@ -214,8 +207,6 @@ class SimilaritySpec extends SparkSpec {
 
   test("IVF+PQ: neighbors come from probed clusters, ADC scores match plain PQ") {
     import graft.model.Tables
-    graft.functions.CosineSimilarity.register(spark)
-    graft.functions.DotProduct.register(spark)
     val emb = Tables.embeddings(spark, sfDir)
     val cents = SimilarityOps.seedCentroids(emb)
     val lits = cents.map { case (cid, v) =>
@@ -251,7 +242,6 @@ class SimilaritySpec extends SparkSpec {
 
   test("PQ training reduces quantization error vs seed codebooks") {
     import graft.model.Tables
-    graft.functions.DotProduct.register(spark)
     val emb = Tables.embeddings(spark, sfDir)
     val seed = SimilarityOps.pqCodebooks(emb)
     val trained = SimilarityOps.trainPqBooks(emb)
@@ -275,7 +265,6 @@ class SimilaritySpec extends SparkSpec {
 
   test("k-means training tightens centroid assignment vs seed centroids") {
     import graft.model.Tables
-    graft.functions.CosineSimilarity.register(spark)
     val emb = Tables.embeddings(spark, sfDir)
     val before = SimilarityOps.assignmentQuality(emb, SimilarityOps.seedCentroids(emb))
     val trained = SimilarityOps.trainCentroids(emb, k = 16, iters = 3)
@@ -286,7 +275,6 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("pagerank: matches a brute-force integer power iteration over the collected edge list") {
-    graft.functions.CosineSimilarity.register(spark)
     val edges = SimilarityOps.nsSimKnnGraph(spark, sfDir)
       .select("src_id", "nbr_id").collect()
       .map(r => (r.getLong(0), r.getLong(1)))
@@ -319,7 +307,6 @@ class SimilaritySpec extends SparkSpec {
 
   test("topic curation: sqrt-flattened quotas filled exactly, assignment matches brute force") {
     import graft.model.Tables
-    graft.functions.CosineSimilarity.register(spark)
     val rows = SimilarityOps.nsCorpusTopics(spark, sfDir).collect()
     assert(rows.nonEmpty)
     // per-topic kept count fills the quota exactly (quota <= n_topic by
@@ -361,7 +348,6 @@ class SimilaritySpec extends SparkSpec {
   test("IVF cluster assignment is a pure projection — zero exchanges") {
     import graft.model.Tables
     import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
-    graft.functions.CosineSimilarity.register(spark)
     val emb = Tables.embeddings(spark, sfDir)
     val cents = SimilarityOps.seedCentroids(emb)
     val lits = cents.map { case (cid, v) =>

@@ -50,6 +50,16 @@ class ServingEndpointsSpec extends SparkSpec {
     assert(missing.isEmpty, s"endpoints without an oracled query: $missing")
   }
 
+  test("the served endpoint mix: 24 registered endpoints, every api_handler query among them") {
+    val unregistered = Pipelines.endpoints.filterNot(Pipelines.queries.contains)
+    assert(unregistered.isEmpty, s"Pipelines.endpoints not in Pipelines.queries: $unregistered")
+    val served = ServingEndpoints.queries.keySet ++ Pipelines.endpoints
+    assert(Pipelines.endpoints.distinct.size == Pipelines.endpoints.size && served.size == 24)
+    assert(served.forall(SparkEntry.queries.contains))
+    val unserved = endpointMap.values.toSet -- served
+    assert(unserved.isEmpty, s"api_handler endpoints the serving mix skips: $unserved")
+  }
+
   private def collectAll(plan: SparkPlan): Seq[SparkPlan] =
     (plan +: plan.children.flatMap(collectAll)) ++ (plan match {
       case a: AdaptiveSparkPlanExec => collectAll(a.inputPlan)

@@ -51,7 +51,7 @@ class StreamingIndexSpec extends SparkSpec {
 
   test("streamed vector batches HNSW-insert into the stored graph like sequential inserts") {
     import graft.operators.SimilarityOps
-    val emb = SimilarityOps.embeddings(spark, sfDir)
+    val emb = Tables.embeddings(spark, sfDir)
     val isHistory = col("vec_id") % 10 >= 2
     val batch1 = col("vec_id") % 20 < 2   // arriving day 1
     val batch2 = col("vec_id") % 20 >= 10 // arriving day 2
