@@ -18,8 +18,7 @@ object BenchWarm {
     */
   def generic(spark: SparkSession, sfDir: String): Unit = {
     spark.range(1000).selectExpr("sum(id)").collect()
-    Seq("region", "nation", "customer", "supplier", "part", "orders",
-      "lineitem", "events", "documents", "embeddings").foreach { t =>
+    graft.model.Tables.names.foreach { t =>
       spark.read.parquet(s"$sfDir/$t.parquet").limit(1).count()
     }
     val w = spark.range(1000).selectExpr("id", "id % 7 AS k", "CAST(id AS STRING) AS s")

@@ -6,6 +6,10 @@ object Verify {
   def main(args: Array[String]): Unit = {
     // Optional trailing args: run only the named queries (dev loop);
     // the driver's 2-arg form runs everything.
+    if (args.length < 2) {
+      System.err.println("usage: graft.Verify <sfDir> <outDir> [query ...]")
+      sys.exit(2)
+    }
     val Array(sfDir, outDir) = args.take(2)
     val only = args.drop(2).toSet
     val spark = Driver.session()

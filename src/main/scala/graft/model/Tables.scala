@@ -92,6 +92,10 @@ object Tables {
     StructField("embedding", ArrayType(FloatType)),
     StructField("label", IntegerType)))
 
+  /** Every fixture table, in the order BenchWarm reads their footers. */
+  val names: Seq[String] = Seq("region", "nation", "customer", "supplier",
+    "part", "orders", "lineitem", "events", "documents", "embeddings")
+
   /** Static dimensions eligible for the serving-session cache — bounded
     * by construction: the enumerated dimension tables only, never the
     * fact/corpus tables (events/lineitem/orders/documents/embeddings),
