@@ -3,12 +3,16 @@ package graft.model
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types._
 
-/** Loaders + explicit schemas for the driver fixture tables
-  * (/root/repo/FIXTURES.md §B). Explicit StructTypes exist so that
-  * (a) schema drift fails loudly, (b) Structured Streaming file sources
-  * (which cannot infer) can reuse them. Semantics derive from the
-  * reference catalog, SURVEY.md §1.4 (reference:
-  * /root/reference/src/utils/data_utils.py:10-15).
+/** Loaders + declared schemas for the driver fixture tables
+  * (FIXTURES.md §B). The loaders do NOT use the declared schemas: every
+  * [[read]] infers its schema from the parquet footer
+  * (`spark.read.parquet(path)`), so a drifted file is read as it is and
+  * fails, if at all, only where a query touches the changed column. The
+  * StructTypes serve the Structured Streaming file sources, which cannot
+  * infer (`eventsRawSchema`, `documentsSchema`); reading with them plus a
+  * one-time footer check is ROADMAP item 2(a). Semantics derive from the
+  * reference catalog, SURVEY.md §1.4 (reference's
+  * src/utils/data_utils.py:10-15).
   */
 object Tables {
 

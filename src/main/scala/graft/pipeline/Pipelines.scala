@@ -15,6 +15,20 @@ object Pipelines {
 
   private[pipeline] val dayEpoch = floor(unix_timestamp(col("ts")) / 86400L)
 
+  /** The response edge of a served endpoint ([[endpoints]] and
+    * [[ServingEndpoints.queries]]), applied as its last step with
+    * `.transform(respond(keys: _*))`: gather the response-sized result into
+    * one partition and sort it there. A global `orderBy` plans a
+    * range-partitioned exchange — a sampling job for the bounds, a shuffle,
+    * then a sort — to order rows the client collects anyway. `coalesce(1)`
+    * also runs the stage that feeds it as one task, which is intended at
+    * response size. Frames that other endpoints compose stay unordered
+    * (the `*Frame` functions), so no composed endpoint sorts twice; ETL
+    * steps whose outputs are not response-sized keep their `orderBy`.
+    */
+  private[pipeline] def respond(keys: String*)(df: DataFrame): DataFrame =
+    df.coalesce(1).sortWithinPartitions(keys.map(col): _*)
+
   /** §3.1 extract-catchup: for every key, enumerate the epochs between its
     * last synced epoch and the finalized epoch, capped at 10 per run
     * (reference: /root/reference/src/extract_handler.py:54-90,139-167).
@@ -43,7 +57,10 @@ object Pipelines {
     * validator_earnings_handler.py:17-49). The warm/cold split vanishes:
     * every key starts from its first observed epoch in one window pass.
     */
-  def incomeSnapshot(spark: SparkSession, dir: String): DataFrame = {
+  def incomeSnapshot(spark: SparkSession, dir: String): DataFrame =
+    incomeSnapshotFrame(spark, dir).transform(respond("user_id"))
+
+  private[pipeline] def incomeSnapshotFrame(spark: SparkSession, dir: String): DataFrame = {
     val income = IncomeKernel.servingIncome(spark, dir)
     val w = Window.partitionBy("user_id").orderBy(col("epoch").desc)
     income
@@ -51,7 +68,6 @@ object Pipelines {
       .where(col("_rn") === 1)
       .select(col("user_id"), col("epoch").as("latest_epoch"),
         col("earnings"), col("losses"), col("apr"))
-      .orderBy("user_id")
   }
 
   /** §3.3 leaderboard serving: per-key income joined to the broadcast
@@ -59,8 +75,11 @@ object Pipelines {
     * (reference: /root/reference/src/api_handler.py:272-310 — /leaderboard
     * and /topIndexes). customer.c_mktsegment stands in for savETHIndex.
     */
-  def leaderboard(spark: SparkSession, dir: String): DataFrame = {
-    val snapshot = incomeSnapshot(spark, dir)
+  def leaderboard(spark: SparkSession, dir: String): DataFrame =
+    leaderboardFrame(spark, dir).transform(respond("rank"))
+
+  private[pipeline] def leaderboardFrame(spark: SparkSession, dir: String): DataFrame = {
+    val snapshot = incomeSnapshotFrame(spark, dir)
     val dim = Tables.customer(spark, dir)
       .select(col("c_custkey"), col("c_mktsegment"))
     val w = Window.orderBy(col("sum_earnings").desc, col("c_mktsegment").asc)
@@ -77,7 +96,6 @@ object Pipelines {
         expr("(_k * 2 + n_validators) div (n_validators * 2)").cast("double") / 1e6)
       .withColumn("rank", row_number().over(w).cast("long"))
       .select("rank", "c_mktsegment", "avg_apr", "sum_earnings", "sum_losses", "n_validators")
-      .orderBy("rank")
   }
 
   /** The /userIncome endpoint composition (reference:
@@ -114,7 +132,7 @@ object Pipelines {
       .select(col("user_id"), col("epoch").as("latest_epoch"), col("earnings"),
         col("portfolio_apr"),
         round(coalesce(col("threat_backing"), lit(1.0)), 6).as("threat_backing"))
-      .orderBy("user_id")
+      .transform(respond("user_id"))
   }
 
   /** Daily APR rollup (reference: /root/reference/src/apr_sync_handler.py
@@ -135,7 +153,7 @@ object Pipelines {
       .where(col("n") >= 5) // MINIMUM_EPOCH_LEADERBOARD analog
       .select(col("user_id"), col("window_earnings"), col("window_losses"),
         IncomeKernel.aprColumn(col("window_earnings"), col("n") - 1).as("apr"), col("n"))
-      .orderBy("user_id")
+      .transform(respond("user_id"))
   }
 
   /** Cross-source watermark alignment (SURVEY.md §7.5#2): the safe upper
@@ -177,7 +195,7 @@ object Pipelines {
     // collects it into a JSON response anyway): materialize it ONCE locally
     // so the three ranking branches don't re-execute the whole income
     // pipeline per metric.
-    val board = leaderboard(spark, dir)
+    val board = leaderboardFrame(spark, dir)
       .select("c_mktsegment", "avg_apr", "sum_earnings", "sum_losses")
       .collect().toSeq
       .map(r => (r.getString(0), r.getDouble(1), r.getDouble(2), r.getDouble(3)))
@@ -190,7 +208,7 @@ object Pipelines {
           col(metric).cast("double").as("metric_value"))
     }
     top("sum_earnings").unionByName(top("sum_losses")).unionByName(top("avg_apr"))
-      .orderBy("metric", "rank")
+      .transform(respond("metric", "rank"))
   }
 
   /** The index_epoch_apr derivation: per-(group, epoch) multi-agg over the
@@ -199,7 +217,10 @@ object Pipelines {
     * OP-22 + OP-30 + OP-19 composed). c_mktsegment again stands in for the
     * index.
     */
-  def indexEpochApr(spark: SparkSession, dir: String): DataFrame = {
+  def indexEpochApr(spark: SparkSession, dir: String): DataFrame =
+    indexEpochAprFrame(spark, dir).transform(respond("idx", "epoch"))
+
+  private[pipeline] def indexEpochAprFrame(spark: SparkSession, dir: String): DataFrame = {
     val income = IncomeKernel.servingIncome(spark, dir)
     val dim = Tables.customer(spark, dir).select(col("c_custkey"), col("c_mktsegment"))
     val grouped = income
@@ -224,7 +245,6 @@ object Pipelines {
         && abs(col("apr") - col("_prev")) > col("apr") * 0.1
         && abs(col("apr") - col("_next")) > col("apr") * 0.1))
       .select("idx", "epoch", "apr", "earnings", "losses")
-      .orderBy("idx", "epoch")
   }
 
   /** The /indexAPRAverage endpoint (reference:
@@ -237,7 +257,7 @@ object Pipelines {
     * micro-unit trick losslessly.
     */
   def indexAprAverage(spark: SparkSession, dir: String): DataFrame = {
-    val board = leaderboard(spark, dir)
+    val board = leaderboardFrame(spark, dir)
       .select("c_mktsegment", "avg_apr", "sum_earnings")
     // The global mean rides an unpartitioned window over the (per-index,
     // i.e. tiny by construction) board instead of a crossJoin against a
@@ -251,7 +271,7 @@ object Pipelines {
         (expr("(_k * 2 + _n) div (_n * 2)").cast("double") / 1e6)
           .as("all_index_apr_average"),
         col("sum_earnings").as("total_deth_earned"))
-      .orderBy("idx")
+      .transform(respond("idx"))
   }
 
   /** The /lsdWiseAPR endpoint (reference:
@@ -284,7 +304,7 @@ object Pipelines {
       .select(col("lsd_index"), col("ticker"),
         coalesce(col("_earnings"), lit(0.0)).as("earnings"),
         coalesce(col("_apr"), lit(0.0)).as("apr"))
-      .orderBy("lsd_index")
+      .transform(respond("lsd_index"))
   }
 
   /** The /userIncomeMEV endpoint (reference:
@@ -318,7 +338,7 @@ object Pipelines {
         (expr("((24000000000 + _em) * slot * 2 + 8000) div 16000")
           .cast("double") / 1e6).as("seth_value"),
         col("slot").cast("long").as("validator_slot"))
-      .orderBy("user_id")
+      .transform(respond("user_id"))
   }
 
   /** The /validatorEpochWiseApr endpoint (reference:
@@ -340,7 +360,7 @@ object Pipelines {
         max(when(col("_rn") === 1, col("earnings"))).over(wAll))
       .where(col("_rn") <= 5 && col("_n") >= 5)
       .select("user_id", "epoch", "apr", "total_deth_earnings")
-      .orderBy("user_id", "epoch")
+      .transform(respond("user_id", "epoch"))
   }
 
   /** The /validatorAprEpochs endpoint (reference:
@@ -356,7 +376,7 @@ object Pipelines {
     income.crossJoin(broadcast(fin))
       .where(col("epoch") >= col("fin") - 7 && col("epoch") <= col("fin"))
       .select("user_id", "epoch", "earnings")
-      .orderBy("user_id", "epoch")
+      .transform(respond("user_id", "epoch"))
   }
 
   /** The /userIncomeNodeRunner endpoint (reference:
@@ -389,21 +409,21 @@ object Pipelines {
         // (24 + earnings/1e3) / 8 * 4 == (24e9 + em) / 2000 µ
         (expr("((24000000000 + _em) * 2 + 2000) div 4000")
           .cast("double") / 1e6).as("seth_value"))
-      .orderBy("user_id")
+      .transform(respond("user_id"))
   }
 
   /** The /averageIndexAPR endpoint (reference:
     * /root/reference/src/api_handler.py:113-130,380-398): the requested
     * index's last-N APR history NEXT TO the open index's (index 0) — two
     * `ORDER BY epoch DESC LIMIT N` reads off the materialized
-    * Validator_Indexes_APR table, which is exactly [[indexEpochApr]]'s
+    * Validator_Indexes_APR table, which is exactly [[indexEpochAprFrame]]'s
     * output here. Restated for every index at once; the open-index column
     * left-joins by epoch (0 when the open index lacks that epoch, matching
     * the endpoint's .get(..., 0) default). AUTOMOBILE stands in for the
     * open index.
     */
   def averageIndexApr(spark: SparkSession, dir: String): DataFrame = {
-    val base = indexEpochApr(spark, dir).select("idx", "epoch", "apr")
+    val base = indexEpochAprFrame(spark, dir).select("idx", "epoch", "apr")
     // The open index's APR at each epoch is a per-epoch window aggregate
     // over the SAME frame — one pass, instead of a where-filtered
     // self-join that re-evaluates the whole index-APR derivation.
@@ -414,7 +434,7 @@ object Pipelines {
         coalesce(max(when(col("idx") === "AUTOMOBILE", col("apr"))).over(wEpoch), lit(0.0)))
       .withColumn("_rn", row_number().over(w)).where(col("_rn") <= 5)
       .select("idx", "epoch", "apr", "open_apr")
-      .orderBy("idx", "epoch")
+      .transform(respond("idx", "epoch"))
   }
 
   /** The /validatorSlotWithdrawals endpoint (reference:
@@ -447,7 +467,7 @@ object Pipelines {
     withdrawalsWithIndex(spark, dir, "epoch")
       .where(col("widx") > lower && col("widx") <= lower + limit)
       .select("user_id", "widx", "event_id", "epoch", "amount")
-      .orderBy("user_id", "widx")
+      .transform(respond("user_id", "widx"))
   }
 
   /** The end-to-end TRAINING-DATA pipeline: dedup survivorship × quality

@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
   */
 object ServingEndpoints {
 
-  import Pipelines.{dayEpoch, epochExpr, incomeCte}
+  import Pipelines.{dayEpoch, epochExpr, incomeCte, respond}
 
   private def income(spark: SparkSession, dir: String): DataFrame =
     IncomeKernel.servingIncome(spark, dir)
@@ -65,7 +65,7 @@ object ServingEndpoints {
       .groupBy(col("c_mktsegment").as("idx"))
       .agg(max(col("epoch")).as("at_epoch"),
         round(sum(col("earnings")), 6).as("deth_earned"))
-      .orderBy("idx")
+      .transform(respond("idx"))
   }
 
   /** The /indexValidators endpoint (reference:
@@ -92,7 +92,7 @@ object ServingEndpoints {
         coalesce(col("_same_pos"), lit(1)).cast("int").as("same_position"),
         coalesce(col("_balance"), lit(1.0)).as("deth_balance"),
         when(col("user_id").isNotNull, 1).otherwise(0).cast("int").as("in_subgraph"))
-      .orderBy("idx", "bls_key")
+      .transform(respond("idx", "bls_key"))
   }
 
   /** The /validatorLSDScore endpoint (reference:
@@ -127,7 +127,7 @@ object ServingEndpoints {
           .otherwise(0).cast("int").as("validator_score"),
         round(greatest(lit(0.0), coalesce(col("_ml"), lit(0.0)) / 1e3 - col("top_up")), 6)
           .as("top_ups"))
-      .orderBy("user_id")
+      .transform(respond("user_id"))
   }
 
   /** The /indexRedemptionRate endpoint (reference:
@@ -162,7 +162,7 @@ object ServingEndpoints {
         when(col("redemption_rate") / col("_exch") > 1.25, "red")
           .when(col("redemption_rate") / col("_exch") > 1.1, "Amber")
           .otherwise("green").as("colour"))
-      .orderBy("idx")
+      .transform(respond("idx"))
   }
 
   /** The /savETHIndexNames endpoint (reference:
@@ -184,7 +184,7 @@ object ServingEndpoints {
         concat(lit("solo_"), col("n_name")).as("_solo_name"))
       .join(broadcast(liquid), col("idx") === col("l_idx"), "left_outer")
       .select(col("idx"), coalesce(col("_liquid_name"), col("_solo_name")).as("index_name"))
-      .orderBy("idx")
+      .transform(respond("idx"))
   }
 
   /** The /mevWatchInfo endpoint (reference:
@@ -202,12 +202,12 @@ object ServingEndpoints {
       .where(col("_sec") >= col("_mx") - 86400L)
       .groupBy("event_type")
       .agg(count(lit(1)).as("n_blocks"), round(sum(col("value")), 6).as("total_value"))
-      .orderBy("event_type")
+      .transform(respond("event_type"))
   }
 
   /** The /indexLeaderboard endpoint (reference:
     * /root/reference/src/api_handler.py:552-580 + indexes_apr :179-202):
-    * every index's latest materialized APR row ([[Pipelines.indexEpochApr]]
+    * every index's latest materialized APR row ([[Pipelines.indexEpochAprFrame]]
     * is the Validator_Indexes_APR analog), its earnings at that epoch in
     * whole units (the reference's /1e9, here /1e3 in exact micro-unit
     * arithmetic — cumulative earnings are non-negative so half-up `div`
@@ -219,7 +219,7 @@ object ServingEndpoints {
     */
   def indexLeaderboard(spark: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy("idx").orderBy(col("epoch").desc)
-    val latest = Pipelines.indexEpochApr(spark, dir)
+    val latest = Pipelines.indexEpochAprFrame(spark, dir)
       .withColumn("_rn", row_number().over(w)).where(col("_rn") === 1)
       .withColumn("_em", round(col("earnings") * 1e6).cast("long"))
       .select(col("idx"), col("apr"),
@@ -231,7 +231,7 @@ object ServingEndpoints {
       .select(col("idx"), col("apr"), col("deth_earned"), col("n_validators"),
         when(col("idx").isin("AUTOMOBILE", "FURNITURE", "MACHINERY"), 0)
           .otherwise(1).cast("int").as("validators_flag"))
-      .orderBy("idx")
+      .transform(respond("idx"))
   }
 
   /** The /validatorWithdrawalsLowerSlot endpoint (reference:
@@ -247,7 +247,7 @@ object ServingEndpoints {
     wd.crossJoin(broadcast(frontier))
       .where(col("slot") >= col("_hi") - 5 && col("slot") <= col("_hi") - 2)
       .select("user_id", "widx", "slot", "amount")
-      .orderBy("user_id", "widx")
+      .transform(respond("user_id", "widx"))
   }
 
   /** The /validatorWithdrawalsLowerUpperSlot endpoint (reference:
@@ -259,7 +259,7 @@ object ServingEndpoints {
     Tables.events(spark, dir).where(col("event_type") === "purchase")
       .groupBy("user_id")
       .agg(max(dayEpoch).as("max_slot"), min(dayEpoch).as("min_slot"))
-      .orderBy("user_id")
+      .transform(respond("user_id"))
 
   /** The /ponBlsKey endpoint (reference:
     * /root/reference/src/api_handler.py:852-867): the eligibility
@@ -274,7 +274,7 @@ object ServingEndpoints {
       .select(col("user_id"),
         when(col("balance") >= 96.0 && coalesce(col("_ml"), lit(0.0)) === 0.0,
           "Validator Eligible").otherwise("Validator Not Eligible").as("eligibility"))
-      .orderBy("user_id")
+      .transform(respond("user_id"))
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "pipe_index_deth_earned" -> (indexDethEarned _),

@@ -192,8 +192,9 @@ class SparkEntrySmokeSpec extends SparkSpec {
     val gated = floatGate(schemas.keys.toSeq, Set("zz_canary_external"), schemas)
     assert(gated == Seq("zz_canary_float", "zz_canary_nested_float"),
       s"derivation filter mis-gates a new query: $gated")
-    // And the real registry goes through the SAME filter function: spot
-    // anchor op30 via a construct-free schema stub to keep this cheap.
+    // And the real registry goes through the SAME filter function: build
+    // the real op30_multi_agg (float) and op31_distinct (not) constructors
+    // and gate them by their schemas.
     val real = floatGate(Seq("op30_multi_agg", "op31_distinct"),
       graft.ops.SourceSinkOps.queries.keySet,
       q => SparkEntry.queries(q)(spark, sfDir).schema)

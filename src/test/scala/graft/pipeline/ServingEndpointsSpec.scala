@@ -1,8 +1,10 @@
 package graft.pipeline
 
 import graft.{SparkEntry, SparkSpec}
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+import org.apache.spark.sql.execution.{SortExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
 
 /** The serving-surface contract: every `handle_request_*` endpoint of the
@@ -50,13 +52,14 @@ class ServingEndpointsSpec extends SparkSpec {
     assert(missing.isEmpty, s"endpoints without an oracled query: $missing")
   }
 
+  private val served = (ServingEndpoints.queries.keySet ++ Pipelines.endpoints).toSeq.sorted
+
   test("the served endpoint mix: 24 registered endpoints, every api_handler query among them") {
     val unregistered = Pipelines.endpoints.filterNot(Pipelines.queries.contains)
     assert(unregistered.isEmpty, s"Pipelines.endpoints not in Pipelines.queries: $unregistered")
-    val served = ServingEndpoints.queries.keySet ++ Pipelines.endpoints
     assert(Pipelines.endpoints.distinct.size == Pipelines.endpoints.size && served.size == 24)
     assert(served.forall(SparkEntry.queries.contains))
-    val unserved = endpointMap.values.toSet -- served
+    val unserved = endpointMap.values.toSet -- served.toSet
     assert(unserved.isEmpty, s"api_handler endpoints the serving mix skips: $unserved")
   }
 
@@ -84,16 +87,47 @@ class ServingEndpointsSpec extends SparkSpec {
     }
   }
 
+  test("the response edge: no served endpoint range-partitions; composed frames stay unordered") {
+    // The executed AQE plans: `inputPlan` holds no exchange yet (AQE's
+    // preparation inserts them), so an inputPlan walk could never fail.
+    val exchanges = served.map { name =>
+      name -> aqeFinalNodes(SparkEntry.queries(name)(spark, sfDir))
+        .collect { case e: ShuffleExchangeExec => e }
+    }
+    // the walk must see the endpoints' hash exchanges, or absence is vacuous
+    assert(exchanges.exists(_._2.nonEmpty), "plan walk found no shuffle exchange at all")
+    val ranged = exchanges.collect {
+      case (name, es) if es.exists(_.outputPartitioning.isInstanceOf[RangePartitioning]) => name
+    }
+    assert(ranged.isEmpty, s"range-partitioned exchange in: ${ranged.mkString(", ")}")
+    // The building blocks other endpoints compose carry no global sort, so
+    // a composed endpoint sorts once, at its own response edge.
+    val frames = Seq(
+      "incomeSnapshotFrame" -> Pipelines.incomeSnapshotFrame _,
+      "leaderboardFrame" -> Pipelines.leaderboardFrame _,
+      "indexEpochAprFrame" -> Pipelines.indexEpochAprFrame _)
+    for ((name, frame) <- frames) {
+      val sorts = aqeFinalNodes(frame(spark, sfDir)).collect { case s: SortExec => s }
+      assert(sorts.nonEmpty, s"$name: plan walk found not even its window sort")
+      assert(!sorts.exists(_.global), s"$name sorts globally:\n${sorts.mkString("\n")}")
+    }
+  }
+
   test("serving dimension cache changes no results, only the physical source") {
-    val probes = Seq("pipe_leaderboard", "pipe_index_validators", "pipe_user_income")
-    val cold = probes.map(q =>
-      q -> graft.SparkEntry.queries(q)(spark, sfDir).collect().map(_.toSeq).toSeq).toMap
+    // Every served endpoint, compared as ORDERED row sequences: the
+    // response order is produced at the response edge, with or without
+    // the caches underneath.
+    def outputs(): Map[String, Seq[Seq[Any]]] = served.map(q =>
+      q -> SparkEntry.queries(q)(spark, sfDir).collect().map(_.toSeq).toSeq).toMap
+    val cold = outputs()
     spark.conf.set("spark.graft.serving.cacheDims", "true")
     spark.conf.set("spark.graft.serving.cacheIncome", "true")
     try {
-      val warm = probes.map(q =>
-        q -> graft.SparkEntry.queries(q)(spark, sfDir).collect().map(_.toSeq).toSeq).toMap
-      assert(warm == cold, "dimension cache drifted serving results")
+      val warm = outputs()
+      val drifted = served.filter(q => warm(q) != cold(q))
+      assert(drifted.isEmpty, s"serving caches drifted results of: ${drifted.mkString(", ")}")
+      val empty = served.filter(q => cold(q).isEmpty)
+      assert(empty.isEmpty, s"vacuous comparison, no rows from: ${empty.mkString(", ")}")
       // and the dims genuinely became in-memory relations
       val nodes = collectAllPlans(graft.model.Tables.customer(spark, sfDir)
         .queryExecution.executedPlan)
