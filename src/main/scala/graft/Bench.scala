@@ -94,9 +94,9 @@ object Bench {
     // registered query to stay in `queries`/`full_s` and the recorded
     // totals, so the split is PURELY ADDITIVE: `baselines*` and
     // `total_headline_full_s` (the wall minus the exact baselines) are
-    // extra keys; `value`/`total_full_s` still cover every query.
-    val baselineQs = Set("ns_sim_neardup_pairs")
-    val basePart = results.filter(r => baselineQs(r._1))
+    // extra keys; `value`/`total_full_s` still cover every query. The
+    // registry declares which queries are baselines (QueryKind).
+    val basePart = results.filter(r => SparkEntry.kindOf(r._1) == QueryKind.ExactBaseline)
     def obj(rs: Seq[(String, Double, Double, Double)], f: ((String, Double, Double, Double)) => Double) =
       rs.map(r => s"\"" + r._1 + "\":" + f(r)).mkString("{", ",", "}")
     val qs = obj(results, _._2)

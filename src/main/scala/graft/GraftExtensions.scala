@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.{CosineSimilarity, DotProduct, MinHashAgg}
+import graft.functions.{CosineSimilarity, DotProduct}
 import graft.operators.DedupOps
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
@@ -25,11 +25,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       new FunctionIdentifier("dot_product"),
       new ExpressionInfo(classOf[DotProduct].getName, "dot_product"),
       (children: Seq[Expression]) => DotProduct(children.head, children(1))))
-    ext.injectFunction((
-      new FunctionIdentifier("minhash_sig"),
-      new ExpressionInfo(classOf[MinHashAgg].getName, "minhash_sig"),
-      (children: Seq[Expression]) =>
-        MinHashAgg(children.head, DedupOps.hashParams, DedupOps.Prime)))
     ext.injectFunction((
       new FunctionIdentifier("minhash_from_set"),
       new ExpressionInfo(classOf[graft.functions.MinHashFromSet].getName, "minhash_from_set"),

@@ -5,6 +5,21 @@ import graft.ops._
 import graft.pipeline.{Pipelines, ServingEndpoints}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+/** What a registered query is to the harnesses that time it. A module
+  * declares the kind by the map it registers a constructor in; every
+  * query outside those maps is an [[QueryKind.Op]].
+  */
+sealed trait QueryKind
+object QueryKind {
+  /** A served API request: the reference's `handle_request_*` surface. */
+  case object Endpoint extends QueryKind
+  /** A request answered from a stored index artifact, built on first use. */
+  case object StoredIndexServe extends QueryKind
+  /** The brute-force truth an approximate twin is measured against. */
+  case object ExactBaseline extends QueryKind
+  case object Op extends QueryKind
+}
+
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   * Each SURVEY.md §2 operator OP-xx appears as one `queries` entry with a
   * matching DuckDB `oracleSql` statement (bare table names; the driver
@@ -35,6 +50,26 @@ object SparkEntry {
       (MultimodalOps.queries, MultimodalOps.oracles),
       (Pipelines.queries, Pipelines.oracles),
       (ServingEndpoints.queries, ServingEndpoints.oracles))
+
+  /** The kinded sub-maps of the modules' registries; each is part of its
+    * module's `queries`, so a name and its kind are written once.
+    */
+  private val kinded: Seq[(QueryKind, Map[String, (SparkSession, String) => DataFrame])] =
+    Seq(
+      QueryKind.Endpoint -> ServingEndpoints.queries,
+      QueryKind.Endpoint -> Pipelines.endpoints,
+      QueryKind.StoredIndexServe -> IndexOps.storedIndexServes,
+      QueryKind.ExactBaseline -> SimilarityOps.exactBaselines)
+
+  /** The kinds a name is declared with (empty for an op). */
+  private[graft] def declaredKinds(name: String): Seq[QueryKind] =
+    kinded.collect { case (k, m) if m.contains(name) => k }
+
+  def kindOf(name: String): QueryKind = declaredKinds(name).headOption.getOrElse(QueryKind.Op)
+
+  /** The registered names of one kind, sorted. */
+  def ofKind(kind: QueryKind): Seq[String] =
+    queries.keys.filter(kindOf(_) == kind).toSeq.sorted
 
   /** Flagship query (OP-38 cumulative income); driver smoke-checks rows>0
     * on sf0.001.

@@ -16,7 +16,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * array per (row, hash). This expression computes all k minima in ONE
   * loop over the set (k multiply-mod updates per element on a primitive
   * long[]), with full codegen support — the same per-element math, so the
-  * signature is byte-identical (MinHashAggSpec pins it) and the generated
+  * signature is byte-identical (DedupSpec pins it) and the generated
   * DuckDB oracle is unchanged.
   *
   * Scale posture: the signature projection is the narrow inner loop of

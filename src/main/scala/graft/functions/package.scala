@@ -21,13 +21,6 @@ package object functions {
   def dotProduct(a: Column, b: Column): Column =
     column(DotProduct(expression(a), expression(b)))
 
-  /** [[MinHashAgg]] over a bigint fingerprint column, with the library's
-    * fixed hash family; an aggregate, for `agg(...)`.
-    */
-  def minhashSig(x: Column): Column =
-    column(MinHashAgg(expression(x), DedupOps.hashParams, DedupOps.Prime)
-      .toAggregateExpression())
-
   /** [[MinHashFromSet]]: the full signature of an array<bigint> shingle set. */
   def minhashFromSet(s: Column): Column =
     column(MinHashFromSet(expression(s), DedupOps.hashParams, DedupOps.Prime))

@@ -107,8 +107,7 @@ object Tables {
     * broadcast-sized side of every serving join.
     */
   private val DimensionTables = Set("customer", "supplier", "part", "nation", "region")
-  private val dimCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+  private val dimCache = new graft.ops.SessionFrames
 
   /** Reads a fixture table. With `spark.graft.serving.cacheDims=true`
     * (opt-in, set by long-lived serving sessions like ServeBench; OFF for
@@ -122,18 +121,8 @@ object Tables {
     val path = s"$dir/$name.parquet"
     val cacheOn = DimensionTables(name) &&
       spark.conf.getOption("spark.graft.serving.cacheDims").contains("true")
-    if (cacheOn) {
-      // Entries of stopped sessions are unreachable garbage (the cached
-      // frames strongly reference their session) — prune on the way in,
-      // so a long-lived JVM cycling serving sessions doesn't accumulate.
-      dimCache.keySet.removeIf { case (s, _) => s.sparkContext.isStopped }
-      val df = dimCache.computeIfAbsent((spark, path), _ => spark.read.parquet(path))
-      // Self-healing: a cacheManager.clearCache() elsewhere (warm loops,
-      // Verify hygiene) silently unpersists; re-mark so the NEXT request
-      // rebuilds the cache instead of silently scanning forever.
-      if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE) df.persist()
-      df
-    } else spark.read.parquet(path)
+    if (cacheOn) dimCache.persisted(spark, path)(spark.read.parquet(path))
+    else spark.read.parquet(path)
   }
 
   /** The fixtures store `events.ts` as parquet TIMESTAMP(NANOS), which Spark

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.functions.{bloomFilterAgg, mightContain, minhashFromSet, minhashSig}
+import graft.functions.{bloomFilterAgg, mightContain, minhashFromSet}
 import graft.model.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -151,7 +151,7 @@ object DedupOps {
     * one array traversal (the declarative k× array_min∘transform form
     * walks the set k times through interpreted lambdas). min over a set
     * equals min over occurrences, so this is byte-identical to
-    * [[minhashSignatures]] (pinned by MinHashAggSpec). The two-step
+    * [[minhashSignatures]] (pinned by DedupSpec). The two-step
     * select stays two-step in the optimized plan: CollapseProject does
     * not duplicate a non-trivial expression into its 32 consumers.
     */
@@ -191,20 +191,6 @@ object DedupOps {
       .where(col("jaccard") >= threshold)
       .select(left, right, "jaccard")
       .orderBy(left, right)
-
-  /** Same signature via the native one-pass aggregate
-    * [[graft.functions.MinHashAgg]] (same hash family — byte-identical
-    * output, pinned by DedupSpec). Kept alongside the declarative version:
-    * the column form stays inside whole-stage codegen; the imperative form
-    * is one primitive-array pass. Which wins is workload-dependent — both
-    * satisfy the same oracle.
-    */
-  private[operators] def minhashSignaturesNative(sh0: DataFrame): DataFrame = {
-    sh0
-      .withColumn("x", col("sh").bitwiseAND(0xffffffffL))
-      .groupBy("doc_id").agg(minhashSig(col("x")).as("sig"))
-      .select(col("doc_id") +: (0 until NumHashes).map(i => col("sig")(i).as(s"h$i")): _*)
-  }
 
   /** Banded-candidate near-dup pairs: band the MinHash signatures,
     * bucket-join candidates (only pairs agreeing on a whole band ever

@@ -1309,12 +1309,17 @@ object SimilarityOps {
       .orderBy("query_id", "rank")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  /** Deliberately exact all-pairs truth for the approximate near-dup
+    * twins; never meant to run at scale.
+    */
+  val exactBaselines: Map[String, (SparkSession, String) => DataFrame] = Map(
+    "ns_sim_neardup_pairs" -> (nsSimNeardupPairs _))
+
+  val queries: Map[String, (SparkSession, String) => DataFrame] = exactBaselines ++ Map(
     "ns_sim_pq_topk" -> (nsSimPqTopk _),
     "ns_sim_pq_trained" -> (nsSimPqTrained _),
     "ns_sim_ivfpq_topk" -> (nsSimIvfPqTopk _),
     "ns_sim_bruteforce_topk" -> (nsSimBruteforceTopk _),
-    "ns_sim_neardup_pairs" -> (nsSimNeardupPairs _),
     "ns_sim_neardup_lsh" -> (nsSimNeardupLsh _),
     "ns_sim_lsh_topk" -> (nsSimLshTopk _),
     "ns_sim_knn_graph" -> (nsSimKnnGraph _),

@@ -93,8 +93,7 @@ object IncomeKernel {
       .select(k, e, col("earnings"), col("losses"), col("apr"), col("epochs_since_active"))
   }
 
-  private val servingIncomeCache = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String), DataFrame]()
+  private val servingIncomeCache = new SessionFrames
 
   /** The income state every serving pipeline reads — and the engine analog
     * of the reference's architecture, where the API handlers read income
@@ -110,15 +109,9 @@ object IncomeKernel {
     */
   def servingIncome(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
     def build = cumulativeIncome(WindowOps.balancesFromEvents(spark, dir))
-    if (spark.conf.getOption("spark.graft.serving.cacheIncome").contains("true")) {
-      // prune entries of stopped sessions, same as the Tables dim cache
-      servingIncomeCache.keySet.removeIf { case (s, _) => s.sparkContext.isStopped }
-      val df = servingIncomeCache.computeIfAbsent((spark, dir), _ => build)
-      // Self-healing after an external cacheManager.clearCache(), like
-      // the Tables dimension cache.
-      if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE) df.persist()
-      df
-    } else build
+    if (spark.conf.getOption("spark.graft.serving.cacheIncome").contains("true"))
+      servingIncomeCache.persisted(spark, dir)(build)
+    else build
   }
 
   /** APR analog of /root/reference/src/utils/financials.py:4-9:

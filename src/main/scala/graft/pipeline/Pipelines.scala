@@ -1306,13 +1306,12 @@ object Pipelines {
     base.unionByName(appended).orderBy("doc_id")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "pipe_platform_build" -> (platformBuild _),
-    "pipe_platform_delta" -> (platformDelta _),
-    "pipe_tokenizer_eval" -> (tokenizerEval _),
-    "pipe_corpus_report" -> (corpusReport _),
-    "pipe_corpus_admission" -> (corpusAdmission _),
-    "pipe_corpus_build" -> (corpusBuild _),
+  /** The validator/index/APR API endpoints, served as requests. The rest
+    * of [[queries]] are ETL steps, skew operators and batch builds (corpus,
+    * platform, training, tokenizer), which a serving harness must not time
+    * as requests.
+    */
+  val endpoints: Map[String, (SparkSession, String) => DataFrame] = Map(
     "pipe_index_apr_average" -> (indexAprAverage _),
     "pipe_lsd_wise_apr" -> (lsdWiseApr _),
     "pipe_user_income_mev" -> (userIncomeMev _),
@@ -1321,30 +1320,25 @@ object Pipelines {
     "pipe_user_income_node_runner" -> (userIncomeNodeRunner _),
     "pipe_average_index_apr" -> (averageIndexApr _),
     "pipe_validator_slot_withdrawals" -> (validatorSlotWithdrawals _),
-    "pipe_training_corpus" -> (trainingCorpus _),
     "pipe_top_indexes" -> (topIndexes _),
     "pipe_index_epoch_apr" -> (indexEpochApr _),
-    "pipe_extract_catchup" -> (extractCatchup _),
     "pipe_income_snapshot" -> (incomeSnapshot _),
     "pipe_leaderboard" -> (leaderboard _),
     "pipe_user_income" -> (userIncome _),
-    "pipe_daily_apr" -> (dailyApr _),
+    "pipe_daily_apr" -> (dailyApr _))
+
+  val queries: Map[String, (SparkSession, String) => DataFrame] = endpoints ++ Map(
+    "pipe_platform_build" -> (platformBuild _),
+    "pipe_platform_delta" -> (platformDelta _),
+    "pipe_tokenizer_eval" -> (tokenizerEval _),
+    "pipe_corpus_report" -> (corpusReport _),
+    "pipe_corpus_admission" -> (corpusAdmission _),
+    "pipe_corpus_build" -> (corpusBuild _),
+    "pipe_training_corpus" -> (trainingCorpus _),
+    "pipe_extract_catchup" -> (extractCatchup _),
     "pipe_watermark_align" -> (watermarkAlign _),
     "ops_salted_sum" -> (saltedSum _),
     "ops_bucketed_join" -> (graft.ops.Skew.bucketedJoin _))
-
-  /** The validator/index/APR API endpoints among [[queries]]. The rest are
-    * ETL steps, skew operators and batch builds (corpus, platform,
-    * training, tokenizer), which a serving harness must not time as
-    * requests.
-    */
-  val endpoints: Seq[String] = Seq(
-    "pipe_index_apr_average", "pipe_lsd_wise_apr", "pipe_user_income_mev",
-    "pipe_epoch_wise_apr", "pipe_apr_between_epochs",
-    "pipe_user_income_node_runner", "pipe_average_index_apr",
-    "pipe_validator_slot_withdrawals", "pipe_top_indexes",
-    "pipe_index_epoch_apr", "pipe_income_snapshot", "pipe_leaderboard",
-    "pipe_user_income", "pipe_daily_apr")
 
   private[pipeline] val epochExpr = "CAST(floor(date_part('epoch', ts)/86400) AS BIGINT)"
 

@@ -21,9 +21,6 @@ object ServingEndpoints {
 
   import Pipelines.{dayEpoch, epochExpr, incomeCte, respond}
 
-  private def income(spark: SparkSession, dir: String): DataFrame =
-    IncomeKernel.servingIncome(spark, dir)
-
   /** Latest observed balance per key (row_number over epoch desc — the
     * beacon "current balance" analog shared by the LSD-score and PoN
     * eligibility endpoints).
@@ -41,7 +38,7 @@ object ServingEndpoints {
     * can left-join it against their own user_id column.
     */
   private def maxLosses(spark: SparkSession, dir: String): DataFrame =
-    income(spark, dir)
+    IncomeKernel.servingIncome(spark, dir)
       .groupBy(col("user_id").as("s_user")).agg(max(col("losses")).as("_ml"))
 
   /** The /indexdETHEarned endpoint (reference:
@@ -55,7 +52,7 @@ object ServingEndpoints {
     */
   def indexDethEarned(spark: SparkSession, dir: String): DataFrame = {
     val dim = Tables.customer(spark, dir).select(col("c_custkey"), col("c_mktsegment"))
-    val joined = income(spark, dir)
+    val joined = IncomeKernel.servingIncome(spark, dir)
       .join(broadcast(dim), col("user_id") === col("c_custkey"))
     val latest = joined.groupBy(col("c_mktsegment").as("m_idx"))
       .agg(max(col("epoch")).as("_m"))
@@ -142,7 +139,7 @@ object ServingEndpoints {
     * engine.
     */
   def indexRedemptionRate(spark: SparkSession, dir: String): DataFrame = {
-    val perKey = income(spark, dir).groupBy("user_id")
+    val perKey = IncomeKernel.servingIncome(spark, dir).groupBy("user_id")
       .agg(max(col("earnings")).as("_e"), max(col("losses")).as("_l"))
     val cust = Tables.customer(spark, dir).select(col("c_custkey"), col("c_nationkey"),
       round(col("c_acctbal") / 1e4, 6).as("top_up"))

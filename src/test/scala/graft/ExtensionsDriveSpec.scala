@@ -46,23 +46,16 @@ class ExtensionsDriveSpec extends AnyFunSuite {
           "array(CAST(2 AS BIGINT), CAST(5 AS BIGINT))) AS l").collect().head
       assert(math.abs(dp.getDouble(0) - 2.0) < 1e-12)
       assert(dp.getLong(1) == -14L)
-      // minhash_sig goes through injectFunction as a TypedImperativeAggregate
-      // — the analyzer must wrap the builder's AggregateFunction itself.
-      // Values are pinned against the declarative hash family: for a single
-      // input x, signature element i is (x & 0xffffffff)*a_i + b_i mod p.
+      // minhash_from_set, pinned against the declarative hash family: for a
+      // one-element set {x}, signature element i is
+      // (x & 0xffffffff)*a_i + b_i mod p.
       val sig = s.sql(
-        "SELECT minhash_sig(x) AS sig FROM VALUES (CAST(7 AS BIGINT)) t(x)")
+        "SELECT minhash_from_set(array(CAST(7 AS BIGINT))) AS sig")
         .collect().head.getSeq[Long](0)
       val expected = graft.operators.DedupOps.hashParams.map { case (a, b) =>
         (7L * a + b) % graft.operators.DedupOps.Prime
       }
-      assert(sig == expected, s"$sig != $expected")
-      // minhash_from_set: the one-pass scalar twin over an array input
-      // must agree with the aggregate form on a one-element set.
-      val sig2 = s.sql(
-        "SELECT minhash_from_set(array(CAST(7 AS BIGINT))) AS sig")
-        .collect().head.getSeq[Long](0)
-      assert(sig2 == expected, s"minhash_from_set $sig2 != $expected")
+      assert(sig == expected, s"minhash_from_set $sig != $expected")
     } finally {
       SparkSession.clearActiveSession()
       SparkSession.clearDefaultSession()

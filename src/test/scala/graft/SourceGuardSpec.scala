@@ -6,9 +6,10 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import scala.jdk.CollectionConverters._
 
-/** Keeps the two one-path decisions from regressing: graft's expressions
+/** Keeps the one-path decisions from regressing: graft's expressions
   * reach queries only as typed Columns (never through a runtime function
-  * registration), and every session is built by [[Driver]].
+  * registration), every session is built by [[Driver]], and the harnesses
+  * take their query mixes from the registry's kinds, not from name lists.
   */
 class SourceGuardSpec extends AnyFunSuite {
 
@@ -38,5 +39,17 @@ class SourceGuardSpec extends AnyFunSuite {
     val hits = offenders(sources("src/main") ++ sources("src/test"), "SparkSession.builder")
       .filterNot(p => exempt(Paths.get(p).getFileName.toString))
     assert(hits.isEmpty, s"SparkSession.builder outside Driver: ${hits.mkString(", ")}")
+  }
+
+  test("Bench and ServeBench name no registered query") {
+    val harness = Seq("Bench.scala", "ServeBench.scala").map { f =>
+      val p = Paths.get("src/main/scala/graft", f)
+      p -> Files.readString(p)
+    }
+    val named = for {
+      name <- SparkEntry.queries.keys.toSeq.sorted
+      hit <- offenders(harness, "\"" + name + "\"")
+    } yield s"$name in $hit"
+    assert(named.isEmpty, s"query-name literals in harness code: ${named.mkString(", ")}")
   }
 }

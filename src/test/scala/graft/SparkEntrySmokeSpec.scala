@@ -36,7 +36,7 @@ import org.apache.spark.sql.types._
   */
 class SparkEntrySmokeSpec extends SparkSpec {
 
-  private val graftNames = Seq("cosine_sim", "dot_product", "minhash_sig",
+  private val graftNames = Seq("cosine_sim", "dot_product",
     "minhash_from_set", "bloom_filter_agg", "might_contain")
 
   /** One permuted copy: every table's rows hash-scattered (seeded) over a

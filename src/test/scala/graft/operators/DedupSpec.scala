@@ -34,18 +34,6 @@ class DedupSpec extends SparkSpec {
     assert(recall >= 0.8, s"simhash recall $recall, pairs=${simhashPairs.size}")
   }
 
-  test("native minhash aggregate equals the declarative 32-column signatures") {
-    val sh = DedupOps.shingles(
-      graft.model.Tables.documents(spark, sfDir)).cache()
-    val declarative = DedupOps.minhashSignatures(sh)
-      .orderBy("doc_id").collect().map(_.toSeq)
-    val native = DedupOps.minhashSignaturesNative(sh)
-      .orderBy("doc_id").collect().map(_.toSeq)
-    assert(declarative.length == native.length && declarative.nonEmpty)
-    declarative.zip(native).foreach { case (d, n) => assert(d == n, s"$d != $n") }
-    sh.unpersist()
-  }
-
   test("set-derived signatures equal the groupBy-min signatures") {
     val docs = graft.model.Tables.documents(spark, sfDir)
     val viaSets = DedupOps.signaturesFromSets(DedupOps.shingleSetsOnePass(docs))

@@ -1,9 +1,8 @@
 package graft.pipeline
 
-import graft.{SparkEntry, SparkSpec}
+import graft.{QueryKind, SparkEntry, SparkSpec}
 import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
-import org.apache.spark.sql.execution.{SortExec, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.SortExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
 
@@ -52,35 +51,27 @@ class ServingEndpointsSpec extends SparkSpec {
     assert(missing.isEmpty, s"endpoints without an oracled query: $missing")
   }
 
-  private val served = (ServingEndpoints.queries.keySet ++ Pipelines.endpoints).toSeq.sorted
+  private val served = SparkEntry.ofKind(QueryKind.Endpoint)
 
   test("the served endpoint mix: 24 registered endpoints, every api_handler query among them") {
-    val unregistered = Pipelines.endpoints.filterNot(Pipelines.queries.contains)
-    assert(unregistered.isEmpty, s"Pipelines.endpoints not in Pipelines.queries: $unregistered")
-    assert(Pipelines.endpoints.distinct.size == Pipelines.endpoints.size && served.size == 24)
-    assert(served.forall(SparkEntry.queries.contains))
+    assert(served.size == 24)
+    assert(ServingEndpoints.queries.keySet.subsetOf(served.toSet))
     val unserved = endpointMap.values.toSet -- served.toSet
     assert(unserved.isEmpty, s"api_handler endpoints the serving mix skips: $unserved")
   }
-
-  private def collectAll(plan: SparkPlan): Seq[SparkPlan] =
-    (plan +: plan.children.flatMap(collectAll)) ++ (plan match {
-      case a: AdaptiveSparkPlanExec => collectAll(a.inputPlan)
-      case _ => Nil
-    })
 
   test("new endpoint plans: no cartesian; nested-loop only as 1-row broadcast cross") {
     val dir = "/root/testdata/sf0.001"
     for (name <- ServingEndpoints.queries.keys) {
       val plan = ServingEndpoints.queries(name)(spark, dir).queryExecution.executedPlan
-      val nodes = collectAll(plan)
+      val nodes = collectAllPlans(plan)
       assert(!nodes.exists(_.isInstanceOf[CartesianProductExec]), s"$name has a cartesian")
       nodes.collect { case b: BroadcastNestedLoopJoinExec => b }.foreach { b =>
         assert(b.joinType.sql == "CROSS", s"$name: non-cross nested loop join")
         // The broadcast side must be an aggregate-produced frontier (a
         // global agg emits exactly one row) — never a table scan.
         val broadcastSide = if (b.buildSide.toString.contains("Right")) b.right else b.left
-        val aggy = collectAll(broadcastSide).exists(
+        val aggy = collectAllPlans(broadcastSide).exists(
           _.getClass.getSimpleName.contains("HashAggregate"))
         assert(aggy, s"$name: cross-join broadcast side is not a 1-row aggregate")
       }
