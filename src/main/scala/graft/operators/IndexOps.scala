@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.functions.cosineSim
 import graft.model.Tables
-import graft.ops.{MergeSink, ProcessTmp}
+import graft.ops.MergeSink
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -48,12 +48,12 @@ import org.apache.spark.sql.functions._
   * fixed costs grew the delta wall 2.1× over a 20× corpus at flat
   * shuffle).
   *
-  * Every build ends with a COMMIT RECORD ([[graft.ops.ArtifactMeta
-  * .commit]]); the registered `ns_*_indexed` queries are GATED on it —
-  * they build only when the artifact is absent and otherwise measure the
-  * SERVE cost alone, while the `ns_*_index_build` twins rebuild
-  * unconditionally and carry the build cost (the
-  * pipe_platform_delta commit-record pattern applied to the index
+  * The registered queries commit each build under tag `build` in the
+  * root's commit log ([[graft.ops.ArtifactMeta.commit]]); the
+  * `ns_*_indexed` queries are GATED on it — they build only when the
+  * tag is absent and otherwise measure the SERVE cost alone, while the
+  * `ns_*_index_build` twins rebuild unconditionally and carry the build
+  * cost (the pipe_platform_delta commit-log pattern applied to the index
   * families, so the per-round gate times build and serve apart).
   */
 object IndexOps {
@@ -121,7 +121,6 @@ object IndexOps {
           .withColumn("bucket", lit(0)), s"$root/stats", "bucket")
       ArtifactMeta.write(docs.sparkSession, root,
         Map("buckets.postings" -> b.toLong, "buckets.doclen" -> b.toLong))
-      ArtifactMeta.commit(docs.sparkSession, root)
     } finally tf.unpersist()
   }
 
@@ -214,7 +213,6 @@ object IndexOps {
       cents.toSeq.map { case (cid, v) => (cid, v.toSeq) }
         .toDF("cent_id", "embedding").withColumn("bucket", lit(0)),
       s"$root/centroids", "bucket")
-    ArtifactMeta.commit(emb.sparkSession, root)
   }
 
   /** Merge a batch of NEWLY-ARRIVED vectors into a stored IVF index:
@@ -293,7 +291,6 @@ object IndexOps {
     MergeSink.publishPartitioned(
       bookRows.toDF("m", "code", "cv").withColumn("bucket", lit(0)),
       s"$root/codebooks", "bucket")
-    ArtifactMeta.commit(emb.sparkSession, root)
   }
 
   private def readCentroids(spark: SparkSession, root: String): Array[(Int, Array[Double])] =
@@ -410,7 +407,6 @@ object IndexOps {
     ArtifactMeta.write(spark, root,
       Map("buckets.edges" -> b.toLong, "beam_ef" -> ef.toLong,
         "beam_recall_pm" -> math.round(recall * 1000)))
-    ArtifactMeta.commit(spark, root)
   }
 
   /** Resolved (src_id, nbr_id) view of the stored adjacency log — the
@@ -520,7 +516,6 @@ object IndexOps {
       s"$root/sets", 0, files, Seq("bucket", "doc_id"))
     ArtifactMeta.write(docs.sparkSession, root,
       Map("buckets.banded" -> b.toLong, "buckets.sets" -> b.toLong))
-    ArtifactMeta.commit(docs.sparkSession, root)
   }
 
   /** Merge a batch of NEWLY-ARRIVED documents into a stored near-dup
@@ -608,7 +603,6 @@ object IndexOps {
       s"$root/weights", "pt",
       audit = a => require(a.count() == TextOps.ClsDim.toLong,
         s"classifier artifact must hold exactly ${TextOps.ClsDim} weights"))
-    ArtifactMeta.commit(spark, root)
   }
 
   /** Score a corpus FROM the stored model: read the [[TextOps.ClsDim]]
@@ -635,146 +629,84 @@ object IndexOps {
 
   // ---- registered queries -------------------------------------------------
 
-  /** Per-process artifact root: unique per JVM (concurrent sbt sessions
-    * never contend) and removed on exit; one subdir per fixture dir so
-    * sf0.001 specs and sf0.01 Verify runs don't cross-pollute.
+  /** One stored-index family, declared once: `name` prefixes its two
+    * registered queries (`<name>_indexed`, `<name>_index_build`), `kind`
+    * names its root ([[graft.ops.ArtifactMeta.rootFor]]), `build`
+    * publishes the artifact at a root and `serve` answers from it. Both
+    * queries share `oracle`, the in-session twin's: the stored index
+    * answers the SAME question, so "a user could swap the cached
+    * pipeline for the stored index and every row survives".
     */
-  private lazy val artifactRoot: String = ProcessTmp.dir("graft_index")
-  private def rootFor(kind: String, dir: String): String =
-    s"$artifactRoot/${kind}_${dir.replaceAll("[^A-Za-z0-9.]", "_")}"
+  private final case class Family(
+      name: String, kind: String, oracle: String,
+      build: (SparkSession, String, String) => Unit,
+      serve: (SparkSession, String, String) => DataFrame)
 
-  /** Build-then-serve, end to end, as ONE oracled query: publish the
-    * index artifact, then answer from the files just written. The oracle
-    * is byte-identical to the in-session query's — "a user could swap the
-    * cached pipeline for the stored index and every row survives".
-    *
-    * Each family registers a BUILD/SERVE pair sharing that oracle (the
-    * pipe_platform_delta commit-record pattern): `ns_*_index_build`
-    * rebuilds the artifact UNCONDITIONALLY and then serves — every
-    * evaluation carries the honest NN-descent/postings/training cost —
-    * while `ns_*_indexed` is GATED on the build's commit record and
-    * otherwise serves from the stored files alone, so the per-round
-    * bench times the serving cost the index exists for (Bench evaluates
-    * alphabetically, so the `_index_build` twin has always materialized
-    * the root before `_indexed` runs).
+  /** The near-dup family's 20% arriving batch — semantics shared with
+    * [[DedupOps.nsDedupIncremental]]: the index holds the other 80%.
     */
-  private def ensureBuilt(spark: SparkSession, root: String, forceBuild: Boolean)(
-      build: => Unit): Unit =
-    if (forceBuild || ArtifactMeta.tryReadLong(spark, root, "commit").isEmpty) build
+  private def isDedupBatch: Column = col("doc_id") % 10 < 2
 
-  private def bm25At(spark: SparkSession, dir: String, forceBuild: Boolean): DataFrame = {
-    val root = rootFor("bm25", dir)
-    ensureBuilt(spark, root, forceBuild)(buildBm25Index(Tables.documents(spark, dir), root))
-    queryBm25Index(spark, root)
-  }
-  def nsTextBm25IndexBuild(spark: SparkSession, dir: String): DataFrame =
-    bm25At(spark, dir, forceBuild = true)
-  def nsTextBm25Indexed(spark: SparkSession, dir: String): DataFrame =
-    bm25At(spark, dir, forceBuild = false)
+  private val families: Seq[Family] = Seq(
+    Family("ns_text_classify", "cls", TextOps.oracles("ns_text_classify_trained"),
+      (spark, dir, root) => buildClassifierIndex(Tables.documents(spark, dir), root),
+      (spark, dir, root) => queryClassifierIndex(spark, root, Tables.documents(spark, dir))),
+    Family("ns_text_bm25", "bm25", TextOps.oracles("ns_text_bm25"),
+      (spark, dir, root) => buildBm25Index(Tables.documents(spark, dir), root),
+      (spark, _, root) => queryBm25Index(spark, root)),
+    Family("ns_sim_ivf", "ivf", SimilarityOps.oracles("ns_sim_ivf_topk"),
+      (spark, dir, root) => buildIvfIndex(Tables.embeddings(spark, dir), root),
+      (spark, _, root) => queryIvfIndex(spark, root)),
+    Family("ns_sim_ivfpq", "ivfpq", SimilarityOps.oracles("ns_sim_ivfpq_topk"),
+      (spark, dir, root) => buildIvfPqIndex(Tables.embeddings(spark, dir), root),
+      (spark, dir, root) => queryIvfPqIndex(spark, root,
+        Tables.embeddings(spark, dir).where(col("vec_id") < SimilarityOps.QuantQueries)
+          .select("vec_id", "embedding"))),
+    // The graph build is PINNED to [[SimilarityOps.BeamEf]] (see
+    // [[buildGraphIndex]] — the shared ns_sim_graph_beam oracle replays
+    // the constant-width walk); the rehearsal's graph_split roots take
+    // the tuner default.
+    Family("ns_sim_graph", "graph", SimilarityOps.oracles("ns_sim_graph_beam"),
+      (spark, dir, root) =>
+        buildGraphIndex(spark, dir, root, pinnedEf = Some(SimilarityOps.BeamEf)),
+      (spark, dir, root) => queryGraphIndex(spark, root, dir)),
+    Family("ns_dedup_minhash", "dedup", DedupOps.oracles("ns_dedup_incremental"),
+      (spark, dir, root) =>
+        buildDedupIndex(Tables.documents(spark, dir).where(!isDedupBatch), root),
+      (spark, dir, root) =>
+        queryDedupIndex(spark, root, Tables.documents(spark, dir).where(isDedupBatch))))
 
-  private def ivfAt(spark: SparkSession, dir: String, forceBuild: Boolean): DataFrame = {
-    val root = rootFor("ivf", dir)
-    ensureBuilt(spark, root, forceBuild)(buildIvfIndex(Tables.embeddings(spark, dir), root))
-    queryIvfIndex(spark, root)
-  }
-  def nsSimIvfIndexBuild(spark: SparkSession, dir: String): DataFrame =
-    ivfAt(spark, dir, forceBuild = true)
-  def nsSimIvfIndexed(spark: SparkSession, dir: String): DataFrame =
-    ivfAt(spark, dir, forceBuild = false)
-
-  private def ivfPqAt(spark: SparkSession, dir: String, forceBuild: Boolean): DataFrame = {
-    val root = rootFor("ivfpq", dir)
-    val emb = Tables.embeddings(spark, dir)
-    ensureBuilt(spark, root, forceBuild)(buildIvfPqIndex(emb, root))
-    queryIvfPqIndex(spark, root,
-      emb.where(col("vec_id") < SimilarityOps.QuantQueries)
-        .select("vec_id", "embedding"))
-  }
-  def nsSimIvfPqIndexBuild(spark: SparkSession, dir: String): DataFrame =
-    ivfPqAt(spark, dir, forceBuild = true)
-  def nsSimIvfPqIndexed(spark: SparkSession, dir: String): DataFrame =
-    ivfPqAt(spark, dir, forceBuild = false)
-
-  /** Build-then-serve for the navigable beam graph — row-identical to
-    * [[SimilarityOps.nsSimGraphBeam]] (shared oracle). The build is
-    * PINNED to [[SimilarityOps.BeamEf]] (see [[buildGraphIndex]] — the
-    * shared oracle replays the constant-width walk); the rehearsal's
-    * graph_split roots take the tuner default.
+  /** Build-then-serve, end to end, as ONE oracled query. `forceBuild`
+    * (`<name>_index_build`) rebuilds the artifact UNCONDITIONALLY, so
+    * every evaluation carries the honest NN-descent/postings/training
+    * cost; otherwise (`<name>_indexed`) the build runs only while the
+    * root's `build` tag is uncommitted, so the per-round bench times the
+    * serving cost the index exists for (Bench evaluates alphabetically,
+    * so the `_index_build` twin has always materialized the root before
+    * `_indexed` runs). The commit is written HERE, by the root's owner,
+    * not inside the build functions: the platform and crawl builds also
+    * publish a dedup index (and the crawl build a classifier) into their
+    * own roots, whose `build` tag must wait for their own last publish.
     */
-  private def graphAt(spark: SparkSession, dir: String, forceBuild: Boolean): DataFrame = {
-    val root = rootFor("graph", dir)
-    ensureBuilt(spark, root, forceBuild)(
-      buildGraphIndex(spark, dir, root, pinnedEf = Some(SimilarityOps.BeamEf)))
-    queryGraphIndex(spark, root, dir)
+  private def ensureBuilt(f: Family, forceBuild: Boolean)(
+      spark: SparkSession, dir: String): DataFrame = {
+    val root = ArtifactMeta.rootFor(f.kind, dir)
+    if (forceBuild || !ArtifactMeta.isCommitted(spark, root, "build")) {
+      f.build(spark, dir, root)
+      ArtifactMeta.commit(spark, root, "build")
+    }
+    f.serve(spark, dir, root)
   }
-  def nsSimGraphIndexBuild(spark: SparkSession, dir: String): DataFrame =
-    graphAt(spark, dir, forceBuild = true)
-  def nsSimGraphIndexed(spark: SparkSession, dir: String): DataFrame =
-    graphAt(spark, dir, forceBuild = false)
-
-  /** Build the index from the 80% corpus, then answer the 20% batch's
-    * near-dup probes from the stored files — semantics shared with
-    * [[DedupOps.nsDedupIncremental]] (same oracle).
-    */
-  private def dedupAt(spark: SparkSession, dir: String, forceBuild: Boolean): DataFrame = {
-    val root = rootFor("dedup", dir)
-    val docs = Tables.documents(spark, dir)
-    val isBatch = col("doc_id") % 10 < 2
-    ensureBuilt(spark, root, forceBuild)(buildDedupIndex(docs.where(!isBatch), root))
-    queryDedupIndex(spark, root, docs.where(isBatch))
-  }
-  def nsDedupMinhashIndexBuild(spark: SparkSession, dir: String): DataFrame =
-    dedupAt(spark, dir, forceBuild = true)
-  def nsDedupMinhashIndexed(spark: SparkSession, dir: String): DataFrame =
-    dedupAt(spark, dir, forceBuild = false)
-
-  /** Build-then-serve for the trained quality classifier — row-identical
-    * to [[TextOps.nsTextClassifyTrained]] (shared oracle).
-    */
-  private def clsAt(spark: SparkSession, dir: String, forceBuild: Boolean): DataFrame = {
-    val root = rootFor("cls", dir)
-    ensureBuilt(spark, root, forceBuild)(
-      buildClassifierIndex(Tables.documents(spark, dir), root))
-    queryClassifierIndex(spark, root, Tables.documents(spark, dir))
-  }
-  def nsTextClassifyIndexBuild(spark: SparkSession, dir: String): DataFrame =
-    clsAt(spark, dir, forceBuild = true)
-  def nsTextClassifyIndexed(spark: SparkSession, dir: String): DataFrame =
-    clsAt(spark, dir, forceBuild = false)
 
   /** The commit-gated serves: answered from the stored artifact, built
     * only by the first evaluation in a process.
     */
-  val storedIndexServes: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "ns_text_classify_indexed" -> (nsTextClassifyIndexed _),
-    "ns_text_bm25_indexed" -> (nsTextBm25Indexed _),
-    "ns_sim_ivf_indexed" -> (nsSimIvfIndexed _),
-    "ns_sim_ivfpq_indexed" -> (nsSimIvfPqIndexed _),
-    "ns_sim_graph_indexed" -> (nsSimGraphIndexed _),
-    "ns_dedup_minhash_indexed" -> (nsDedupMinhashIndexed _))
+  val storedIndexServes: Map[String, (SparkSession, String) => DataFrame] =
+    families.map(f => s"${f.name}_indexed" -> ensureBuilt(f, forceBuild = false) _).toMap
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = storedIndexServes ++ Map(
-    "ns_text_classify_index_build" -> (nsTextClassifyIndexBuild _),
-    "ns_text_bm25_index_build" -> (nsTextBm25IndexBuild _),
-    "ns_sim_ivf_index_build" -> (nsSimIvfIndexBuild _),
-    "ns_sim_ivfpq_index_build" -> (nsSimIvfPqIndexBuild _),
-    "ns_sim_graph_index_build" -> (nsSimGraphIndexBuild _),
-    "ns_dedup_minhash_index_build" -> (nsDedupMinhashIndexBuild _))
+  val queries: Map[String, (SparkSession, String) => DataFrame] = storedIndexServes ++
+    families.map(f => s"${f.name}_index_build" -> ensureBuilt(f, forceBuild = true) _)
 
-  /** The stored-index queries answer the SAME question as their in-session
-    * twins, so they (and their build twins) share those oracles verbatim.
-    */
-  val oracles: Map[String, String] = Map(
-    "ns_text_classify_indexed" -> TextOps.oracles("ns_text_classify_trained"),
-    "ns_text_bm25_indexed" -> TextOps.oracles("ns_text_bm25"),
-    "ns_sim_ivf_indexed" -> SimilarityOps.oracles("ns_sim_ivf_topk"),
-    "ns_sim_ivfpq_indexed" -> SimilarityOps.oracles("ns_sim_ivfpq_topk"),
-    "ns_sim_graph_indexed" -> SimilarityOps.oracles("ns_sim_graph_beam"),
-    "ns_dedup_minhash_indexed" -> DedupOps.oracles("ns_dedup_incremental"),
-    "ns_text_classify_index_build" -> TextOps.oracles("ns_text_classify_trained"),
-    "ns_text_bm25_index_build" -> TextOps.oracles("ns_text_bm25"),
-    "ns_sim_ivf_index_build" -> SimilarityOps.oracles("ns_sim_ivf_topk"),
-    "ns_sim_ivfpq_index_build" -> SimilarityOps.oracles("ns_sim_ivfpq_topk"),
-    "ns_sim_graph_index_build" -> SimilarityOps.oracles("ns_sim_graph_beam"),
-    "ns_dedup_minhash_index_build" -> DedupOps.oracles("ns_dedup_incremental"))
+  val oracles: Map[String, String] = families.flatMap(f =>
+    Seq(s"${f.name}_indexed" -> f.oracle, s"${f.name}_index_build" -> f.oracle)).toMap
 }

@@ -529,10 +529,6 @@ object PackingOps {
     "doc_id BIGINT, lang STRING, toks BIGINT, cum_before BIGINT, " +
       "first_chunk BIGINT, last_chunk BIGINT, day INT, shard_id BIGINT")
 
-  private[graft] def crawlDeltaRoot(dir: String): String =
-    graft.ops.ProcessTmp.dir("graft_crawl_delta") + "/" +
-      dir.replaceAll("[^A-Za-z0-9.]", "_")
-
   /** INCREMENTAL CRAWL → SHARDS — the daily form of [[pipeCrawlCorpus]],
     * as one oracled query: day 1 runs the full crawl build and PUBLISHES
     * its artifacts (seen-URL log, eval probe shingles, banded/sets
@@ -569,8 +565,8 @@ object PackingOps {
     * byte-idempotent.
     */
   def pipeCrawlDelta(spark: SparkSession, dir: String): DataFrame = {
-    val root = crawlDeltaRoot(dir)
-    if (!graft.pipeline.Pipelines.isCommitted(spark, root, "crawl_build"))
+    val root = graft.ops.ArtifactMeta.rootFor("crawl_delta", dir)
+    if (!graft.ops.ArtifactMeta.isCommitted(spark, root, "crawl_build"))
       buildCrawlBase(spark, dir, root)
     crawlDeltaStage(spark, dir, root)
   }
@@ -675,7 +671,7 @@ object PackingOps {
         .withColumn("bucket", lit(0)),
       s"$root/stats", "bucket")
     packInput.unpersist()
-    graft.pipeline.Pipelines.recordCommit(spark, root, "crawl_build")
+    graft.ops.ArtifactMeta.commit(spark, root, "crawl_build")
   }
 
   /** The day-2 stage alone over published day-1 artifacts — separated so

@@ -27,6 +27,12 @@ import org.apache.spark.sql.functions._
   * builders of sibling tables under one root (the platform build writes
   * the dedup index AND the labels table) publish their entries
   * independently through the same write-audit-publish sink.
+  *
+  * This module also owns the two other root-level decisions, so no
+  * caller derives them: WHERE a root lives ([[rootFor]] — every stored
+  * index, platform and crawl root) and WHETHER a stage of it committed
+  * ([[commit]] / [[isCommitted]] — the `root/commits` log every gated
+  * build, delta and streaming batch writes last and probes first).
   */
 object ArtifactMeta {
 
@@ -117,24 +123,48 @@ object ArtifactMeta {
   def readBuckets(spark: SparkSession, root: String, table: String): Int =
     readLong(spark, root, s"buckets.$table").toInt
 
-  /** [[readLong]] without the fail-loud contract — for COMMIT-RECORD
-    * probes, where "absent" is a normal state meaning "never built here
-    * (or torn mid-build)" and the caller's answer is to build.
+  /** The per-process home of every artifact root: unique per JVM
+    * (concurrent sbt sessions never contend) and removed on exit.
     */
-  def tryReadLong(spark: SparkSession, root: String, key: String): Option[Long] =
-    try {
-      val rows = spark.read.parquet(s"$root/meta").where(col("k") === key)
-        .select("v").collect()
-      if (rows.length == 1) Some(rows.head.getLong(0)) else None
-    } catch {
-      case _: org.apache.spark.sql.AnalysisException => None
-    }
+  private lazy val home: String = ProcessTmp.dir("graft_artifacts")
 
-  /** Stamp the build's COMMIT RECORD — the LAST publish of every index
-    * build, so its presence proves every prior artifact publish landed
-    * (the [[graft.pipeline.Pipelines]] stats-commit pattern). Gated serve
-    * paths probe it with [[tryReadLong]] and rebuild when absent.
+  /** The root of the `kind` artifact built over the corpus at `dir` —
+    * the one derivation for every stored index, platform and crawl root.
+    * The sanitized dir keeps the path readable; the SHA-256 prefix of
+    * the RAW dir keeps two dirs that differ only in special characters
+    * ('a/b' vs 'a_b') from colliding onto one root and serving each
+    * other's artifacts.
     */
-  def commit(spark: SparkSession, root: String): Unit =
-    write(spark, root, Map("commit" -> 1L))
+  def rootFor(kind: String, dir: String): String = {
+    val digest = java.security.MessageDigest.getInstance("SHA-256")
+      .digest(dir.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      .take(6).map(b => f"$b%02x").mkString
+    s"$home/${kind}_${dir.replaceAll("[^A-Za-z0-9.]", "_")}_$digest"
+  }
+
+  /** Append `tag` to the COMMIT LOG at `root/commits` — the LAST publish
+    * of a stage, so a listable tag proves every prior artifact publish of
+    * that stage landed. One row per committed stage, each tag its own
+    * top-level partition, so re-committing a tag is an idempotent
+    * directory swap. A log (not a single last-stage record) makes
+    * duplicate detection exact for ANY historical tag: a delayed
+    * duplicate from an at-least-once upstream, or a scheduler
+    * re-submitting an old day, finds its tag however many stages
+    * committed since.
+    */
+  def commit(spark: SparkSession, root: String, tag: String): Unit =
+    MergeSink.publishPartitioned(
+      spark.range(1).select(
+        lit(tag).as("tag"),
+        current_timestamp().cast("string").as("committed_at")),
+      s"$root/commits", "tag")
+
+  /** Is `tag` in the commit log at `root`? One filesystem existence probe
+    * — no Spark job, no data read — and an absent or cold root simply
+    * answers false (never built here, or torn before its commit).
+    */
+  def isCommitted(spark: SparkSession, root: String, tag: String): Boolean = {
+    val p = new org.apache.hadoop.fs.Path(s"$root/commits/tag=$tag")
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+  }
 }

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.ops.ArtifactMeta
 import graft.pipeline.Pipelines
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
@@ -15,9 +16,11 @@ import org.apache.spark.sql.functions.col
   * stream path, state lives in the published artifacts.
   *
   * Exactly-once posture: every completed stage appends its tag to the
-  * COMMIT LOG at `root/commits` ([[Pipelines.recordCommit]] — the last
-  * publish of the stage; the single-row stats record remains as a
-  * fallback for pre-log roots). Each micro-batch runs under tag
+  * root's COMMIT LOG ([[graft.ops.ArtifactMeta.commit]] — the last
+  * publish of the stage, probed with one existence check by
+  * [[graft.ops.ArtifactMeta.isCommitted]]; the single-row stats record
+  * remains as a fallback that heals a crash between the stats publish
+  * and the log row). Each micro-batch runs under tag
   * `batch_<epochId>`; on crash-replay Spark re-delivers the same epoch
   * id — and an at-least-once UPSTREAM may re-feed an old batch long
   * after newer ones committed, which a last-stage-only record cannot
@@ -54,18 +57,18 @@ object StreamingPlatformDelta {
           val tag = s"batch_$epochId"
           // Commit-LOG probe first (exact for ANY historical tag — a
           // delayed duplicate from an at-least-once upstream is skipped,
-          // not re-run); the stats record remains as the fallback for
-          // roots built before the log existed.
-          val logged = Pipelines.isCommitted(spark, root, tag)
+          // not re-run); the stats record is the fallback for a crash
+          // between the stats publish and the log row.
+          val logged = ArtifactMeta.isCommitted(spark, root, tag)
           val statsMatch = !logged &&
             spark.read.parquet(s"$root/stats")
               .select(col("commit")).head().getString(0) == tag
           // Heal the log when only the stats fallback matched: a crash
-          // between the stats publish and recordCommit left the tag out
+          // between the stats publish and the log row left the tag out
           // of the log forever, so a LATER delayed duplicate (after the
           // stats row moved on) would re-run the whole delta — write the
           // missing commit row now, in the skip path.
-          if (statsMatch) Pipelines.recordCommit(spark, root, tag)
+          if (statsMatch) ArtifactMeta.commit(spark, root, tag)
           if (!(logged || statsMatch)) {
             // Drive the stage to completion: the artifact publishes are
             // eager; the returned re-stated manifest is the artifact's

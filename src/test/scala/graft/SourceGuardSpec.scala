@@ -9,7 +9,8 @@ import scala.jdk.CollectionConverters._
 /** Keeps the one-path decisions from regressing: graft's expressions
   * reach queries only as typed Columns (never through a runtime function
   * registration), every session is built by [[Driver]], and the harnesses
-  * take their query mixes from the registry's kinds, not from name lists.
+  * take their query mixes from the registry's kinds, not from name lists,
+  * and artifact roots are derived and committed in one module.
   */
 class SourceGuardSpec extends AnyFunSuite {
 
@@ -51,5 +52,14 @@ class SourceGuardSpec extends AnyFunSuite {
       hit <- offenders(harness, "\"" + name + "\"")
     } yield s"$name in $hit"
     assert(named.isEmpty, s"query-name literals in harness code: ${named.mkString(", ")}")
+  }
+
+  test("only ArtifactMeta derives artifact roots and spells the commit log") {
+    val hits = for {
+      token <- Seq("\"[^A-Za-z0-9.]\"", "commits/tag=")
+      p <- offenders(sources("src/main"), token)
+      if Paths.get(p).getFileName.toString != "ArtifactMeta.scala"
+    } yield s"$token in $p"
+    assert(hits.isEmpty, s"artifact-root format outside ArtifactMeta: ${hits.mkString(", ")}")
   }
 }

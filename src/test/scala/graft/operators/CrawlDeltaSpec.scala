@@ -28,7 +28,7 @@ class CrawlDeltaSpec extends SparkSpec {
   test("delta append continues the stored stream exactly; replay is byte-idempotent; day-0 files never rewritten") {
     val first = PackingOps.pipeCrawlDelta(spark, sfDir).collect().map(_.toSeq).toSeq
     assert(first.nonEmpty, "crawl delta admitted nothing at sf0.001 — test is vacuous")
-    val root = PackingOps.crawlDeltaRoot(sfDir)
+    val root = graft.ops.ArtifactMeta.rootFor("crawl_delta", sfDir)
     // The appended rows start EXACTLY at the stored day-1 token total —
     // chunk/shard ids continue the existing stream, no gap, no overlap.
     val baseToks = spark.read.parquet(s"$root/stats")

@@ -46,21 +46,18 @@ class GraphBeamSpec extends SparkSpec {
   }
 
   test("stored-graph serve path is row-identical to the in-session build-and-walk") {
-    val fromIndex = IndexOps.nsSimGraphIndexed(spark, sfDir).collect().toSeq
+    val fromIndex = IndexOps.queries("ns_sim_graph_indexed")(spark, sfDir).collect().toSeq
     val inSession = SimilarityOps.nsSimGraphBeam(spark, sfDir).collect().toSeq
     assert(fromIndex == inSession,
       s"stored-graph walk diverged: index=${fromIndex.take(3)} session=${inSession.take(3)}")
     // ...and the artifact actually exists on disk as the bucketed layout
     // the serve path reads (the build/serve split is real, not a cache).
-    val root = new java.io.File(s"${graft.ops.ProcessTmp.dir("graft_index")}")
-    assert(root.listFiles != null && root.listFiles.exists(_.getName.startsWith("graph_")),
-      "graph artifact root missing")
+    val graphRoot = graft.ops.ArtifactMeta.rootFor("graph", sfDir)
+    assert(new java.io.File(s"$graphRoot/edges").isDirectory, "graph artifact root missing")
     // The stored artifact carries its own tuned beam width; at fixture
     // scale the build's tuner must land on the pinned BeamEf (the shared
     // oracle replays that width) — if this ever breaks, the tuner and the
     // constant diverged and the registered query needs re-pinning.
-    val graphRoot = root.listFiles.filter(_.getName.startsWith("graph_"))
-      .maxBy(_.lastModified).getPath
     assert(graft.ops.ArtifactMeta.readLong(spark, graphRoot, "beam_ef") ==
       SimilarityOps.BeamEf.toLong, "stored beam_ef diverged from the pinned BeamEf")
   }

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.SparkSpec
 import graft.model.Tables
+import graft.ops.ArtifactMeta
 import org.apache.spark.sql.functions._
 
 /** Persisted-index contract: a query served from the written artifact is
@@ -16,8 +17,50 @@ class IndexOpsSpec extends SparkSpec {
   test("bm25 served from the stored index equals the in-session query") {
     val want = TextOps.nsTextBm25(spark, sfDir).collect().map(_.toSeq).toSeq
     assert(want.nonEmpty, "fixture produced no bm25 rows — test is vacuous")
-    val got = IndexOps.nsTextBm25Indexed(spark, sfDir).collect().map(_.toSeq).toSeq
+    val got = IndexOps.queries("ns_text_bm25_indexed")(spark, sfDir).collect().map(_.toSeq).toSeq
     assert(got == want, s"index-served mismatch: got=${got.take(3)} want=${want.take(3)}")
+  }
+
+  test("a torn index root is rebuilt by the gated serve, then equals the in-session answer") {
+    val want = TextOps.nsTextBm25(spark, sfDir).collect().map(_.toSeq).toSeq
+    val root = ArtifactMeta.rootFor("bm25", sfDir)
+    // Torn: every artifact published (from half the corpus, so serving it
+    // unrebuilt would show) but the `build` tag missing from the log.
+    IndexOps.buildBm25Index(Tables.documents(spark, sfDir).where(col("doc_id") % 2 === 0), root)
+    def rm(f: java.io.File): Unit = {
+      Option(f.listFiles).toSeq.flatten.foreach(rm); f.delete(); ()
+    }
+    rm(new java.io.File(s"$root/commits/tag=build"))
+    assert(!ArtifactMeta.isCommitted(spark, root, "build"))
+    assert(IndexOps.queryBm25Index(spark, root).collect().map(_.toSeq).toSeq != want,
+      "the torn root already answers like the full corpus — test is vacuous")
+    val got = IndexOps.queries("ns_text_bm25_indexed")(spark, sfDir)
+      .collect().map(_.toSeq).toSeq
+    assert(got == want, s"torn root served unrebuilt: sizes ${got.size} vs ${want.size}")
+    assert(ArtifactMeta.isCommitted(spark, root, "build"), "the rebuild left no build tag")
+  }
+
+  test("fixture dirs that differ only in a special character get their own index roots") {
+    // Two copies of the fixtures at dirs one sanitizer would map to one
+    // name; the second holds two thirds of the documents.
+    val base = graft.ops.ProcessTmp.dir("graft_root_collide")
+    val (dirA, dirB) = (s"$base/fx-a", s"$base/fx_a")
+    for (d <- Seq(dirA, dirB)) {
+      new java.io.File(d).mkdirs()
+      new java.io.File(sfDir).listFiles.filter(_.getName != "documents.parquet")
+        .foreach(f => java.nio.file.Files.copy(f.toPath, new java.io.File(d, f.getName).toPath,
+          java.nio.file.StandardCopyOption.REPLACE_EXISTING))
+    }
+    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    docs.write.mode("overwrite").parquet(s"$dirA/documents.parquet")
+    docs.where(col("doc_id") % 3 =!= 0).write.mode("overwrite").parquet(s"$dirB/documents.parquet")
+    val answers = Seq(dirA, dirB).map { d =>
+      val want = TextOps.nsTextBm25(spark, d).collect().map(_.toSeq).toSeq
+      val got = IndexOps.queries("ns_text_bm25_indexed")(spark, d).collect().map(_.toSeq).toSeq
+      assert(got == want, s"$d was served another dataset's index")
+      want
+    }
+    assert(answers(0) != answers(1), "the two copies answer alike — test is vacuous")
   }
 
   test("incremental index update converges to the full-build answer") {
@@ -58,7 +101,7 @@ class IndexOpsSpec extends SparkSpec {
   test("ivf served from the stored index equals the in-session query") {
     val want = SimilarityOps.nsSimIvfTopk(spark, sfDir).collect().map(_.toSeq).toSeq
     assert(want.nonEmpty)
-    val got = IndexOps.nsSimIvfIndexed(spark, sfDir).collect().map(_.toSeq).toSeq
+    val got = IndexOps.queries("ns_sim_ivf_indexed")(spark, sfDir).collect().map(_.toSeq).toSeq
     assert(got == want, s"ivf index-served mismatch: got=${got.take(3)} want=${want.take(3)}")
   }
 
@@ -97,7 +140,7 @@ class IndexOpsSpec extends SparkSpec {
   test("ivfpq served from the stored index equals the in-session query") {
     val want = SimilarityOps.nsSimIvfPqTopk(spark, sfDir).collect().map(_.toSeq).toSeq
     assert(want.nonEmpty)
-    val got = IndexOps.nsSimIvfPqIndexed(spark, sfDir).collect().map(_.toSeq).toSeq
+    val got = IndexOps.queries("ns_sim_ivfpq_indexed")(spark, sfDir).collect().map(_.toSeq).toSeq
     assert(got == want, s"ivfpq index-served mismatch: got=${got.take(3)} want=${want.take(3)}")
   }
 
@@ -133,7 +176,7 @@ class IndexOpsSpec extends SparkSpec {
     import graft.operators.DedupOps
     val want = DedupOps.nsDedupIncremental(spark, sfDir).collect().map(_.toSeq).toSeq
     assert(want.nonEmpty)
-    val got = IndexOps.nsDedupMinhashIndexed(spark, sfDir).collect().map(_.toSeq).toSeq
+    val got = IndexOps.queries("ns_dedup_minhash_indexed")(spark, sfDir).collect().map(_.toSeq).toSeq
     assert(got == want, s"dedup index-served mismatch: got=${got.take(3)} want=${want.take(3)}")
     spark.sharedState.cacheManager.clearCache()
   }
@@ -240,7 +283,7 @@ class IndexOpsSpec extends SparkSpec {
   test("classifier served from the stored model equals the in-session trained query") {
     val want = TextOps.nsTextClassifyTrained(spark, sfDir).collect().map(_.toSeq).toSeq
     assert(want.nonEmpty, "fixture produced no classifier rows — test is vacuous")
-    val got = IndexOps.nsTextClassifyIndexed(spark, sfDir).collect().map(_.toSeq).toSeq
+    val got = IndexOps.queries("ns_text_classify_indexed")(spark, sfDir).collect().map(_.toSeq).toSeq
     assert(got == want, s"model-served mismatch: got=${got.take(3)} want=${want.take(3)}")
   }
 

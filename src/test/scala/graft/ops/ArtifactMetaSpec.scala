@@ -1,9 +1,11 @@
 package graft.ops
 
 import graft.SparkSpec
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
-/** The artifact-layout catalog: corpus-scaled bucket sizing and the
-  * persisted meta table every stored index's update path reads back.
+/** The artifact-layout catalog: corpus-scaled bucket sizing, the
+  * persisted meta table every stored index's update path reads back, and
+  * the commit log every gated build probes.
   */
 class ArtifactMetaSpec extends SparkSpec {
 
@@ -40,6 +42,39 @@ class ArtifactMetaSpec extends SparkSpec {
     intercept[Exception] { ArtifactMeta.readLong(spark, root, "beam_ef") }
     intercept[IllegalStateException] {
       ArtifactMeta.readLong(spark, root + "_absent", "buckets.banded")
+    }
+  }
+
+  test("a commit probe starts no Spark job and reads a cold or absent root as uncommitted") {
+    val root = graft.ops.ProcessTmp.dir("graft_meta_spec") + "/commit"
+    ArtifactMeta.write(spark, root, Map("buckets.postings" -> 8L)) // cold: no commit yet
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("probe", "commit probes")
+      assert(!ArtifactMeta.isCommitted(spark, root + "_absent", "build"))
+      assert(!ArtifactMeta.isCommitted(spark, root, "build"))
+      sc.clearJobGroup()
+      ArtifactMeta.commit(spark, root, "build")
+      sc.setJobGroup("probe", "commit probes")
+      assert(ArtifactMeta.isCommitted(spark, root, "build"))
+      assert(!ArtifactMeta.isCommitted(spark, root, "delta"))
+      // The listener bus delivers in order: once the sentinel job's start
+      // is seen, every probe-group job start would have been seen too.
+      sc.setJobGroup("sentinel", "listener flush")
+      spark.range(1).count()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!groups.contains("sentinel") && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(groups.contains("sentinel"), "listener never saw the sentinel job")
+      assert(!groups.contains("probe"), "a commit probe started a Spark job")
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
     }
   }
 }

@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import graft.SparkSpec
+import graft.ops.ArtifactMeta
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -210,7 +211,7 @@ class PlatformDeltaSpec extends SparkSpec {
     val isB2 = (c: Column) => c % 20 === 11
     Pipelines.platformBuildCore(spark, sfDir, r2,
       !isB1(col("doc_id")) && !isB2(col("doc_id")))
-    assert(Pipelines.isCommitted(spark, r2, "build"), "build tag not logged")
+    assert(ArtifactMeta.isCommitted(spark, r2, "build"), "build tag not logged")
     val docs = graft.model.Tables.documents(spark, sfDir)
     Pipelines.platformDeltaBatch(spark, docs.where(isB1(col("doc_id"))), r2,
       commitTag = Some("batch_1")).count()
@@ -223,15 +224,15 @@ class PlatformDeltaSpec extends SparkSpec {
     // ...so a delayed re-delivery of batch_1 (an at-least-once upstream
     // re-feeding an old batch after newer ones committed) slips past it —
     // the commit LOG is what catches it.
-    assert(statsCommit != "batch_1" && Pipelines.isCommitted(spark, r2, "batch_1"),
+    assert(statsCommit != "batch_1" && ArtifactMeta.isCommitted(spark, r2, "batch_1"),
       "delayed duplicate of batch_1 would re-run a full delta")
-    assert(Pipelines.isCommitted(spark, r2, "batch_2"))
-    assert(!Pipelines.isCommitted(spark, r2, "batch_3"),
+    assert(ArtifactMeta.isCommitted(spark, r2, "batch_2"))
+    assert(!ArtifactMeta.isCommitted(spark, r2, "batch_3"),
       "an uncommitted tag must not read as committed")
     // Re-recording a tag (the crash-between-stats-and-commit replay
     // window) is an idempotent partition swap, not an error.
-    Pipelines.recordCommit(spark, r2, "batch_1")
-    assert(Pipelines.isCommitted(spark, r2, "batch_1"))
+    ArtifactMeta.commit(spark, r2, "batch_1")
+    assert(ArtifactMeta.isCommitted(spark, r2, "batch_1"))
   }
 
   test("two consecutive deltas == frozen full rebuild; day-2 writes touch only day=2; compaction preserves the view") {

@@ -81,7 +81,7 @@ class StreamingPlatformDeltaSpec extends SparkSpec {
       strRoot, cp).awaitTermination()
     assert(snapshot(strRoot) == before, "checkpoint restart mutated the artifacts")
 
-    // Crash window between the stats publish and recordCommit: drop the
+    // Crash window between the stats publish and the commit-log row: drop the
     // commit-LOG row for batch_1 and the checkpoint's engine-level commit
     // marker, so a restart REPLAYS epoch 1 with only the stats fallback
     // matching. The replay must skip (artifacts untouched) AND heal the
