@@ -104,7 +104,12 @@ object Tables {
     * by construction: the enumerated dimension tables only, never the
     * fact/corpus tables (events/lineitem/orders/documents/embeddings),
     * which stream at 100 TB. At scale these dims are the
-    * broadcast-sized side of every serving join.
+    * broadcast-sized side of every serving join. A cached dim under
+    * `spark.sql.autoBroadcastJoinThreshold` is stored in one partition
+    * ([[graft.ops.SessionFrames]]), so the aggregates and windows a request
+    * runs over it plan no exchange; a request joining two one-partition
+    * frames broadcasts the smaller, since a merge join of two
+    * `SinglePartition` children re-shuffles both.
     */
   private val DimensionTables = Set("customer", "supplier", "part", "nation", "region")
   private val dimCache = new graft.ops.SessionFrames

@@ -105,7 +105,14 @@ object IncomeKernel {
     * once per (session, dataset) and every request joins against it; in
     * production the same role is played by the incrementally-maintained
     * snapshot of [[graft.streaming.StreamingIncome]]. OFF by default, so
-    * Verify and Bench measure the full cache-cold derivation.
+    * Verify and Bench measure the full cache-cold derivation. The cached
+    * frame is stored in one partition while its size estimate is at most
+    * `spark.sql.autoBroadcastJoinThreshold` ([[SessionFrames]]): the
+    * per-key windows, per-epoch aggregates and global ranks of the
+    * endpoints then plan no exchange over it. Two-child joins are the
+    * exception — `EnsureRequirements` re-shuffles both `SinglePartition`
+    * sides of a merge join — so an endpoint joining it to another
+    * request-sized frame broadcasts that frame.
     */
   def servingIncome(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
     def build = cumulativeIncome(WindowOps.balancesFromEvents(spark, dir))

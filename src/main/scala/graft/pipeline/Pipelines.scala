@@ -128,7 +128,10 @@ object Pipelines {
       .agg(round(coalesce(sum(col("s_acctbal")), lit(1.0)), 6).as("threat_backing"))
     latest
       .join(perEpoch, "epoch")
-      .join(threat, col("user_id") === col("c_custkey"), "left_outer")
+      // threat is one row per customer, a dimension: broadcast it, so the
+      // one-partition serving income is not re-shuffled for a merge join
+      // (see graft.ops.SessionFrames)
+      .join(broadcast(threat), col("user_id") === col("c_custkey"), "left_outer")
       .select(col("user_id"), col("epoch").as("latest_epoch"), col("earnings"),
         col("portfolio_apr"),
         round(coalesce(col("threat_backing"), lit(1.0)), 6).as("threat_backing"))
@@ -187,27 +190,21 @@ object Pipelines {
 
   /** The /topIndexes endpoint: the leaderboard groups ranked three ways in
     * one pass (reference: /root/reference/src/api_handler.py:306-310 —
-    * "top7" by earnings / losses / APR).
+    * "top7" by earnings / losses / APR). The board is unpivoted into one
+    * (metric, value) row per group and metric, and one window partitioned
+    * by metric ranks all three: the board, and the income pipeline under
+    * it, is evaluated once, in plan, with no driver round-trip.
     */
   def topIndexes(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    // The board is a handful of rows at the serving edge (the reference
-    // collects it into a JSON response anyway): materialize it ONCE locally
-    // so the three ranking branches don't re-execute the whole income
-    // pipeline per metric.
-    val board = leaderboardFrame(spark, dir)
-      .select("c_mktsegment", "avg_apr", "sum_earnings", "sum_losses")
-      .collect().toSeq
-      .map(r => (r.getString(0), r.getDouble(1), r.getDouble(2), r.getDouble(3)))
-      .toDF("c_mktsegment", "avg_apr", "sum_earnings", "sum_losses")
-    def top(metric: String): DataFrame = {
-      val w = Window.orderBy(col(metric).desc, col("c_mktsegment").asc)
-      board.withColumn("rank", row_number().over(w).cast("long"))
-        .filter(col("rank") <= 7)
-        .select(lit(metric).as("metric"), col("rank"), col("c_mktsegment"),
-          col(metric).cast("double").as("metric_value"))
-    }
-    top("sum_earnings").unionByName(top("sum_losses")).unionByName(top("avg_apr"))
+    val w = Window.partitionBy("metric")
+      .orderBy(col("metric_value").desc, col("c_mktsegment").asc)
+    leaderboardFrame(spark, dir)
+      .select(col("c_mktsegment"), expr("stack(3, " +
+        "'sum_earnings', sum_earnings, 'sum_losses', sum_losses, 'avg_apr', avg_apr)" +
+        " as (metric, metric_value)"))
+      .withColumn("rank", row_number().over(w).cast("long"))
+      .where(col("rank") <= 7)
+      .select("metric", "rank", "c_mktsegment", "metric_value")
       .transform(respond("metric", "rank"))
   }
 
@@ -300,7 +297,8 @@ object Pipelines {
         col("_earnings"))
     Tables.nation(spark, dir)
       .select(col("n_nationkey").as("lsd_index"), col("n_name").as("ticker"))
-      .join(perIdx, Seq("lsd_index"), "left_outer")
+      // one row per LSD index: broadcast, as in userIncome
+      .join(broadcast(perIdx), Seq("lsd_index"), "left_outer")
       .select(col("lsd_index"), col("ticker"),
         coalesce(col("_earnings"), lit(0.0)).as("earnings"),
         coalesce(col("_apr"), lit(0.0)).as("apr"))

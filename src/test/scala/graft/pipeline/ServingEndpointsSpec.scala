@@ -1,8 +1,10 @@
 package graft.pipeline
 
 import graft.{QueryKind, SparkEntry, SparkSpec}
-import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
-import org.apache.spark.sql.execution.SortExec
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.plans.physical.{RangePartitioning, SinglePartition}
+import org.apache.spark.sql.execution.{FileSourceScanExec, SortExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
 
@@ -104,35 +106,73 @@ class ServingEndpointsSpec extends SparkSpec {
     }
   }
 
+  private val servingCaches = Seq("spark.graft.serving.cacheDims", "spark.graft.serving.cacheIncome")
+
+  /** Runs `body` in `s` with both serving caches on, then clears them. */
+  private def withServingCaches[T](s: SparkSession)(body: => T): T = {
+    servingCaches.foreach(s.conf.set(_, "true"))
+    try body
+    finally {
+      servingCaches.foreach(s.conf.unset)
+      s.sharedState.cacheManager.clearCache()
+    }
+  }
+
   test("serving dimension cache changes no results, only the physical source") {
     // Every served endpoint, compared as ORDERED row sequences: the
     // response order is produced at the response edge, with or without
     // the caches underneath.
-    def outputs(): Map[String, Seq[Seq[Any]]] = served.map(q =>
-      q -> SparkEntry.queries(q)(spark, sfDir).collect().map(_.toSeq).toSeq).toMap
-    val cold = outputs()
-    spark.conf.set("spark.graft.serving.cacheDims", "true")
-    spark.conf.set("spark.graft.serving.cacheIncome", "true")
-    try {
-      val warm = outputs()
+    def outputs(s: SparkSession): Map[String, Seq[Seq[Any]]] = served.map(q =>
+      q -> SparkEntry.queries(q)(s, sfDir).collect().map(_.toSeq).toSeq).toMap
+    def incomePlan(s: SparkSession) =
+      graft.ops.IncomeKernel.servingIncome(s, sfDir).queryExecution.executedPlan
+    // the scan of the cached income (under AQE, the root reports no partitioning)
+    def incomeLayout(s: SparkSession) = collectAllPlans(incomePlan(s))
+      .collectFirst { case m: InMemoryTableScanExec => m.outputPartitioning }
+    val cold = outputs(spark)
+    val empty = served.filter(q => cold(q).isEmpty)
+    assert(empty.isEmpty, s"vacuous comparison, no rows from: ${empty.mkString(", ")}")
+    def assertNoDrift(warm: Map[String, Seq[Seq[Any]]], layout: String): Unit = {
       val drifted = served.filter(q => warm(q) != cold(q))
-      assert(drifted.isEmpty, s"serving caches drifted results of: ${drifted.mkString(", ")}")
-      val empty = served.filter(q => cold(q).isEmpty)
-      assert(empty.isEmpty, s"vacuous comparison, no rows from: ${empty.mkString(", ")}")
+      assert(drifted.isEmpty, s"serving caches ($layout) drifted results of: ${drifted.mkString(", ")}")
+    }
+    withServingCaches(spark) {
+      assertNoDrift(outputs(spark), "one-partition layout")
       // and the dims genuinely became in-memory relations
       val nodes = collectAllPlans(graft.model.Tables.customer(spark, sfDir)
         .queryExecution.executedPlan)
       assert(nodes.exists(_.nodeName.toLowerCase.contains("inmemory")),
         s"customer dim not served from cache: ${nodes.map(_.nodeName)}")
-      // the income snapshot is served from the materialized frame too
-      val incNodes = collectAllPlans(graft.ops.IncomeKernel
-        .servingIncome(spark, sfDir).queryExecution.executedPlan)
+      // the income snapshot is served from the materialization, in one partition
+      val incNodes = collectAllPlans(incomePlan(spark))
       assert(incNodes.exists(_.nodeName.toLowerCase.contains("inmemory")),
         s"income not served from the materialization: ${incNodes.map(_.nodeName)}")
-    } finally {
-      spark.conf.unset("spark.graft.serving.cacheDims")
-      spark.conf.unset("spark.graft.serving.cacheIncome")
-      spark.sharedState.cacheManager.clearCache()
+      assert(incomeLayout(spark).contains(SinglePartition),
+        s"cached income not in one partition: ${incomeLayout(spark)}")
+    }
+    // The same caches with the layout gated off: the frames keep the
+    // partitioning of the plans that built them, and answers stay equal.
+    val gatedOff = spark.newSession()
+    gatedOff.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    withServingCaches(gatedOff) {
+      assertNoDrift(outputs(gatedOff), "build layout")
+      assert(incomeLayout(gatedOff).exists(_ != SinglePartition),
+        s"the gate is off, yet the cached income is laid out as ${incomeLayout(gatedOff)}")
+    }
+  }
+
+  test("with both serving caches on, every endpoint that reads no raw table plans no shuffle") {
+    withServingCaches(spark) {
+      val plans = served.map(q => q -> aqeFinalNodes(SparkEntry.queries(q)(spark, sfDir)))
+      // derived from the plans: the endpoints whose every source is a cached frame
+      val cachedOnly = plans.filterNot(_._2.exists(_.isInstanceOf[FileSourceScanExec]))
+      info(s"${cachedOnly.size} of ${plans.size} endpoints read only cached state")
+      assert(cachedOnly.size >= 17,
+        s"only ${cachedOnly.size} endpoints read cached state alone: ${cachedOnly.map(_._1)}")
+      val shuffled = cachedOnly.collect {
+        case (q, nodes) if nodes.exists(_.isInstanceOf[ShuffleExchangeExec]) => q
+      }
+      assert(shuffled.isEmpty, s"shuffle over the cached serving state in: ${shuffled.mkString(", ")}")
     }
   }
 
