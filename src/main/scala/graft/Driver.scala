@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftStorage, SparkSession}
 
 /** The one session factory and evaluate/clear path shared by every main
   * and the specs.
@@ -33,12 +33,15 @@ object Driver {
       (it: Iterator[_]) => { var n = 0L; while (it.hasNext) { it.next(); n += 1 }; n }).sum
 
   /** Drops every cached frame and persisted RDD, which covers the blocks of
-    * `localCheckpoint`, so the next query starts cold and storage does not
-    * grow across a run.
+    * the steps [[graft.ops.Steps]] pinned, so the next query starts cold
+    * and storage does not grow across a run. The blocks go through the
+    * same quiet release as `Steps.advance`: `RDD.unpersist` would log a
+    * warning for every pinned step.
     */
   def clearState(spark: SparkSession): Unit = {
     spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+    val sc = spark.sparkContext
+    sc.getPersistentRDDs.keys.foreach(GraftStorage.unpersistRDD(sc, _, blocking = true))
   }
 
   /** Contention sentinel: wall of a constant job, in ms. Flat on a quiet

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.functions.{bloomFilterAgg, mightContain, minhashFromSet}
 import graft.model.Tables
+import graft.ops.Steps
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -343,7 +344,7 @@ object DedupOps {
   }
 
   /** [[corpusIndex]] for LONG-LIVED consumers (streaming admission): both
-    * frames are eagerly localCheckpoint'ed — plan-free, executor-resident —
+    * frames are pinned ([[Steps.pin]]) — plan-free, executor-resident —
     * and the intermediate shingle cache is released immediately, so holding
     * the index across an unbounded stream pins exactly two block sets and
     * nothing else. At 100 TB these are materialized tables bucketed by
@@ -353,8 +354,8 @@ object DedupOps {
     val sets0 = shingleSetsOnePass(docs).cache()
     val banded = signaturesFromSets(sets0)
       .select(col("doc_id"), explode(array(bandKeyCols: _*)).as("band_key"))
-      .localCheckpoint() // materializes the sets0 cache as a side effect
-    val sets = sets0.localCheckpoint()
+      .transform(Steps.pin) // materializes the sets0 cache as a side effect
+    val sets = Steps.pin(sets0)
     sets0.unpersist()
     (banded, sets)
   }
@@ -368,18 +369,11 @@ object DedupOps {
       corpusBanded: DataFrame,
       corpusSets: DataFrame,
       threshold: Double = 0.5,
-      cacheShingles: Boolean = true,
       batchIsSmall: Option[Boolean] = Some(true)): DataFrame = {
-    // The batch set frame feeds both signatures and the verify. One-shot
-    // batch callers cache+materialize it (Verify/Bench clear the cache
-    // manager after each query); the long-running streaming admission
-    // passes cacheShingles=false and gets an eager localCheckpoint —
-    // blocks free on RDD GC, so no per-batch CacheManager entry
-    // accumulates over an unbounded stream.
-    val sets0 = shingleSetsOnePass(batchDocs)
-    val sets =
-      if (cacheShingles) { val s = sets0.cache(); s.count(); s }
-      else sets0.localCheckpoint()
+    // The batch set frame feeds both signatures and the verify, so it is
+    // pinned. A pin adds no CacheManager entry, so an unbounded stream of
+    // admission batches accumulates none.
+    val sets = Steps.pin(shingleSetsOnePass(batchDocs))
     val banded = signaturesFromSets(sets)
       .select(col("doc_id"), explode(array(bandKeyCols: _*)).as("band_key"))
     // Broadcast whichever side the caller declares REQUEST-sized, so the
@@ -538,11 +532,11 @@ object DedupOps {
       .distinct()
       // Pin: feeds both the sets-bucket collect (pruned path) and the
       // verify — without it the banded probe would run twice.
-      .localCheckpoint()
+      .transform(Steps.pin)
     val corpusSets = corpusSetsFor(cands.select(col("corpus_doc").as("doc_id")))
     val bc = setIntersectVerify(cands, sets, corpusSets, "batch_doc", "corpus_doc", threshold)
       .select(col("batch_doc").as("doc_a"), col("corpus_doc").as("doc_b"))
-    // Materialize the edge list EAGERLY (localCheckpoint) so (a) every
+    // Materialize the edge list EAGERLY (Steps.pin) so (a) every
     // read of the caller's pre-update stored artifacts completes HERE,
     // before any index maintenance rewrites them, and (b) the signature
     // cache can be dropped immediately — `sig` feeds nothing past this
@@ -550,7 +544,7 @@ object DedupOps {
     // rest of a long Verify/Bench session. The returned `sets` stays
     // cached (the caller's decontamination gate explodes it); callers
     // unpersist it once their gates are materialized.
-    val edges = bb.unionByName(bc).localCheckpoint()
+    val edges = Steps.pin(bb.unionByName(bc))
     sig.unpersist()
     (sets, edges)
   }
@@ -763,8 +757,10 @@ object DedupOps {
     * rarer than documents, so this is usually round 0), finish with a
     * driver union-find and broadcast the labels back. The (overwhelming)
     * singleton majority never enters any of this — it unions in at the
-    * end. localCheckpoint truncates lineage each round — iterative plans
-    * otherwise nest exponentially.
+    * end. Each contraction, pointer-jump and mapping step is pinned and
+    * releases its predecessor ([[Steps.advance]]) — iterative plans would
+    * otherwise nest exponentially, and each round's blocks would wait for
+    * GC.
     */
   private[graft] def componentLabelsFromEdges(
       allNodes: DataFrame,
@@ -784,40 +780,37 @@ object DedupOps {
       require(round < 64, s"component contraction did not converge in $round rounds")
       val sym = edges.unionByName(edges.select(col("v").as("u"), col("u").as("v")))
       // lbl(x) = min(x, min(N(x))) — a forest of min-pointers (lbl(x) <= x).
-      var lbl = sym.groupBy(col("u").as("node"))
+      var lbl = Steps.pin(sym.groupBy(col("u").as("node"))
         .agg(min(col("v")).as("mn"))
-        .select(col("node"), least(col("node"), col("mn")).as("lbl"))
-        .localCheckpoint()
+        .select(col("node"), least(col("node"), col("mn")).as("lbl")))
       // Pointer-jump to the forest roots: lbl := lbl(lbl) until fixpoint.
-      // Depth halves per jump — O(log depth) node-map self-joins.
+      // Depth halves per jump — O(log depth) node-map self-joins. After
+      // the first jump lbl also carries `moved`.
       var jumping = true
       while (jumping) {
-        val next = lbl.as("x")
+        lbl = Steps.advance(lbl, lbl.select("node", "lbl").as("x")
           .join(lbl.select(col("node").as("lbl"), col("lbl").as("lbl2")), Seq("lbl"))
           .select(col("node"), least(col("lbl"), col("lbl2")).as("lbl"),
-            (col("lbl2") < col("lbl")).as("moved"))
-          .localCheckpoint()
-        jumping = next.where(col("moved")).limit(1).count() > 0
-        lbl = next.select("node", "lbl")
+            (col("lbl2") < col("lbl")).as("moved")))
+        jumping = lbl.where(col("moved")).limit(1).count() > 0
       }
       val lu = lbl.select(col("node").as("u"), col("lbl").as("lu"))
       val lv = lbl.select(col("node").as("v"), col("lbl").as("lv"))
-      val contracted = edges.join(lu, "u").join(lv, "v")
+      edges = Steps.advance(edges, edges.join(lu, "u").join(lv, "v")
         .select(least(col("lu"), col("lv")).as("u"),
           greatest(col("lu"), col("lv")).as("v"))
-        .where(col("u") =!= col("v")).distinct().localCheckpoint()
+        .where(col("u") =!= col("v")).distinct())
       mapping =
         if (mapping == null) lbl
         else {
           // mapping: orig -> label_k; lbl: label_k -> label_{k+1}. A label
           // absent from lbl had no remaining edges and stays as-is.
           val step = lbl.select(col("node").as("lbl"), col("lbl").as("next"))
-          mapping.join(step, Seq("lbl"), "left_outer")
-            .select(col("node"), coalesce(col("next"), col("lbl")).as("lbl"))
-            .localCheckpoint()
+          val composed = Steps.advance(mapping, mapping.join(step, Seq("lbl"), "left_outer")
+            .select(col("node"), coalesce(col("next"), col("lbl")).as("lbl")))
+          Steps.release(lbl)
+          composed
         }
-      edges.unpersist()
-      edges = contracted
       val n2 = edges.count()
       require(n2 < n, s"component contraction stalled at $n edges")
       n = n2
@@ -827,10 +820,10 @@ object DedupOps {
     // edge list (<= driverMaxEdges rows — bounded memory by construction).
     val edgeArr = edges.select(col("u").cast("long"), col("v").cast("long"))
       .collect().map(r => (r.getLong(0), r.getLong(1)))
-    // The residual is on the driver now — release the executor cache so a
-    // long-lived session (Verify/Bench run 79 queries in one) doesn't pin
-    // it. localCheckpoint blocks from contraction rounds free on RDD GC.
-    edges.unpersist()
+    // The residual is on the driver now — release it (a cache entry, or a
+    // contraction round's pin) so a long-lived session (Verify/Bench run
+    // 79 queries in one) doesn't hold it.
+    Steps.release(edges)
     val parent = new java.util.HashMap[Long, Long]()
     def find(x: Long): Long = {
       var r = x
@@ -852,7 +845,7 @@ object DedupOps {
     // Compose: orig node -> (contraction labels) -> union-find component.
     // A label with no residual edges is already its component's min id.
     // No cache: the common path is a driver-local dataset, and the
-    // contraction path reads localCheckpoint blocks — both cheap to
+    // contraction path reads pinned blocks — both cheap to
     // re-evaluate, and an uncached frame leaves nothing pinned behind.
     val labels =
       if (mapping == null) residualLabels.select(col("lbl").as("doc_id"), col("component"))

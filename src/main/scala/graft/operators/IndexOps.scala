@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.functions.cosineSim
 import graft.model.Tables
-import graft.ops.MergeSink
+import graft.ops.{MergeSink, Steps}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -154,7 +154,7 @@ object IndexOps {
         .select(col("doc_id"), col("dlen"), col("bucket").cast("int"))
       val newDocs = newDlen.select("doc_id")
         .join(oldDlen.select("doc_id"), Seq("doc_id"), "left_anti")
-        .localCheckpoint() // pin: reads the PRE-append doclen slice
+        .transform(Steps.pin) // pin: reads the PRE-append doclen slice
       val freshTf = tf.join(broadcast(newDocs), Seq("doc_id"), "left_semi")
       MergeSink.appendLogSeq(freshTf.withColumn("bucket", termBucket(pBuckets)),
         s"$root/postings", ArtifactMeta.AppendFiles, Seq("bucket", "wd"))
@@ -466,7 +466,7 @@ object IndexOps {
       .where(col("_rn") <= SimilarityOps.BeamMaxDegree)
       .select("src_id", "nbr_id")
       .withColumn("bucket", pmod(col("src_id"), lit(graphBuckets.toLong)).cast("int"))
-      .localCheckpoint() // one beam-search execution; pin before publish
+      .transform(Steps.pin) // one beam-search execution; pin before publish
     MergeSink.appendLogSeq(rebuilt, s"$root/edges",
       ArtifactMeta.AppendFiles, Seq("bucket", "src_id"))
   }
@@ -546,7 +546,7 @@ object IndexOps {
       .select("doc_id")
     val newDocs = newSets.select("doc_id").distinct()
       .join(storedIds, Seq("doc_id"), "left_anti")
-      .localCheckpoint() // pin: probes the PRE-append log
+      .transform(Steps.pin) // pin: probes the PRE-append log
     MergeSink.appendLogSeq(
       banded.distinct()
         .join(broadcast(newDocs), Seq("doc_id"), "left_semi")

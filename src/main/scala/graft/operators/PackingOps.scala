@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.model.Tables
+import graft.ops.Steps
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -747,11 +748,11 @@ object PackingOps {
       .withColumn("shard_id", expr(s"cum_before div $ExportShardTokens"))
       .select(col("doc_id"), col("lang"), col("toks"), col("cum_before"),
         col("first_chunk"), col("last_chunk"), col("shard_id"))
-      .localCheckpoint() // pin: feeds the publish AND the touched-shard list
+      .transform(Steps.pin) // pin: feeds the publish AND the touched-shard list
     graft.ops.MergeSink.publishPartitionedCols(
       appended.withColumn("day", lit(1)),
       s"$root/export", Seq("day", "shard_id"), onePerPartition = true)
-    // appended is localCheckpointed (eager) — nothing reads packInput
+    // appended is pinned (eager) — nothing reads packInput
     // again; release it instead of pinning executor memory for the rest
     // of a long Verify/Bench session (buildCrawlBase's twin does this).
     packInput.unpersist()

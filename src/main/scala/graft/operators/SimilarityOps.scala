@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.functions.{cosineSim, dotProduct}
 import graft.model.Tables
+import graft.ops.Steps
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -337,8 +338,9 @@ object SimilarityOps {
     * this is the offline graph-build job whose output is the STORED
     * artifact ([[IndexOps.buildGraphIndex]] publishes exactly this frame,
     * bucketed by src_id, and `ns_sim_graph_indexed` serves the walk from
-    * the files); the in-session localCheckpoint form remains for the
-    * build-and-walk query.
+    * the files); the in-session pinned form remains for the
+    * build-and-walk query. Each round pins its symmetrized graph and its
+    * refined edges, releasing the step before ([[Steps.advance]]).
     */
   private[operators] def beamGraphEdges(spark: SparkSession, dir: String): DataFrame =
     beamGraphEdgesFrom(Tables.embeddings(spark, dir))
@@ -357,18 +359,17 @@ object SimilarityOps {
         .withColumn("_rn", row_number().over(w))
         .where(col("_rn") <= k)
         .select("src_id", "nbr_id")
-    var edges = knnRankedEdgesFrom(emb, LshBucketCap)
-      .select("src_id", "nbr_id").localCheckpoint()
+    var edges = Steps.pin(knnRankedEdgesFrom(emb, LshBucketCap)
+      .select("src_id", "nbr_id"))
     for (_ <- 1 to rounds) {
-      val s = sym(edges).localCheckpoint()
+      val s = Steps.advance(edges, sym(edges))
       val twoHop = s.select(col("src_id"), col("nbr_id").as("mid"))
         .join(s.select(col("src_id").as("mid"), col("nbr_id")), "mid")
         .select("src_id", "nbr_id")
         .where(col("src_id") =!= col("nbr_id"))
-      edges = rescoreTop(s.unionByName(twoHop).distinct(), RefineK)
-        .localCheckpoint()
+      edges = Steps.advance(s, rescoreTop(s.unionByName(twoHop).distinct(), RefineK))
     }
-    rescoreTop(sym(edges), BeamMaxDegree).localCheckpoint()
+    Steps.advance(edges, rescoreTop(sym(edges), BeamMaxDegree))
   }
 
   /** HNSW-LITE GRAPH ANN — beam search over the persisted navigable
@@ -447,7 +448,7 @@ object SimilarityOps {
       .withColumn("_rn", row_number().over(w))
       .where(col("_rn") <= ef)
       .select("query_id", "node", "cos")
-      .localCheckpoint() // iterative plan: truncate lineage per hop
+      .transform(Steps.pin) // iterative plan: truncate lineage per hop
     val embN = emb.where(nodeFilter)
       .select(col("vec_id").as("node"), col("embedding").as("c_emb"))
     // NO explicit broadcast hints on the beam side (round-15, measured):
@@ -459,20 +460,21 @@ object SimilarityOps {
     // clustered: serve walls/shuffle MB at parity or worse) and costs
     // ~0.1 s of driver round-trip per broadcast build — 10 per walk
     // (2 joins × 5 hops), +1.0 s on the sf0.1 walk (2.91 → 3.90 s).
+    // Each hop releases the beam before it; the caller's `edges` is
+    // never released here.
     for (_ <- 1 to hops) {
       val cand = beam.select(col("query_id"), col("node"))
         .join(edges, col("node") === col("src_id"))
         .select(col("query_id"), col("nbr_id").as("node"))
         .unionByName(beam.select("query_id", "node"))
         .distinct()
-      beam = cand
+      beam = Steps.advance(beam, cand
         .join(embN, "node")
         .join(broadcast(queries), "query_id")
         .withColumn("cos", round(cosineSim(col("q_emb"), col("c_emb")), 4))
         .withColumn("_rn", row_number().over(w))
         .where(col("_rn") <= ef)
-        .select("query_id", "node", "cos")
-        .localCheckpoint()
+        .select("query_id", "node", "cos"))
     }
     beam.where(col("node") =!= col("query_id"))
       .withColumn("rank", row_number().over(w).cast("long"))
@@ -573,7 +575,7 @@ object SimilarityOps {
     * the bucket-cap construction, bounding every contribution sum far
     * below 2^63 / d.
     *
-    * Scale shape: the edge list is computed ONCE (localCheckpoint) and
+    * Scale shape: the edge list is computed ONCE (pinned) and
     * each iteration is one src-keyed join + one nbr-keyed aggregation —
     * two exchanges per iteration over k·N bounded edges, the same
     * bounded-iteration pattern as [[trainCentroids]] but with state kept
@@ -581,9 +583,11 @@ object SimilarityOps {
     */
   def nsSimPagerank(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(spark, dir)
-    val edges = knnRankedEdges(spark, dir, LshBucketCap)
-      .select("src_id", "nbr_id").localCheckpoint()
-    val nodes = emb.select(col("vec_id")).localCheckpoint()
+    // edges and nodes are read by every iteration and by the result, so
+    // they stay pinned; each iteration releases the ranks before it.
+    val edges = Steps.pin(knnRankedEdges(spark, dir, LshBucketCap)
+      .select("src_id", "nbr_id"))
+    val nodes = Steps.pin(emb.select(col("vec_id")))
     val deg = edges.groupBy("src_id").agg(count(lit(1)).as("out_deg"))
     var r = nodes.withColumn("r", lit(PrUnit))
     for (_ <- 1 to PrIters) {
@@ -592,12 +596,11 @@ object SimilarityOps {
         .join(r.select(col("vec_id").as("src_id"), col("r")), "src_id")
         .select(col("nbr_id").as("vec_id"), expr("r div out_deg").as("share"))
         .groupBy("vec_id").agg(sum("share").as("contrib"))
-      r = nodes.join(contrib, Seq("vec_id"), "left")
+      r = Steps.advance(r, nodes.join(contrib, Seq("vec_id"), "left")
         .select(col("vec_id"),
           (lit(PrUnit - PrDamp) + expr(
             s"($PrDamp * coalesce(contrib, CAST(0 AS BIGINT))) div $PrUnit"))
-            .as("r"))
-        .localCheckpoint()
+            .as("r")))
     }
     val inDeg = edges.groupBy(col("nbr_id").as("vec_id"))
       .agg(count(lit(1)).as("in_deg"))
@@ -1099,8 +1102,8 @@ object SimilarityOps {
   }
 
   /** The fixed centroid model + cluster assignment of a corpus, for
-    * long-lived consumers (streaming admission): assignment is
-    * localCheckpoint'ed (plan-free, executor-resident across batches).
+    * long-lived consumers (streaming admission): assignment is pinned
+    * (plan-free, executor-resident across batches).
     */
   private[graft] def semIndexMaterialized(
       corpusEmb: DataFrame): (Array[(Int, Array[Double])], DataFrame) = {
@@ -1108,7 +1111,7 @@ object SimilarityOps {
     val assign = corpusEmb
       .withColumn("cluster", centroidRanking(centLits(cents))(0)("cent_id").cast("long"))
       .select(col("vec_id"), col("embedding"), col("cluster"))
-      .localCheckpoint()
+      .transform(Steps.pin)
     (cents, assign)
   }
 

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.model.Tables
+import graft.ops.Steps
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1618,7 +1619,7 @@ object TextOps {
         (col("m_u") > 0L).as("keep"),
         (col("y_u") === 1000000L).as("label"))
       .orderBy("doc_id")
-      .localCheckpoint() // pin before dropping the shared feature cache
+      .transform(Steps.pin) // pin before dropping the shared feature cache
     inputs.unpersist()
     out
   }
@@ -1647,7 +1648,7 @@ object TextOps {
         expr("((tp + tn) * 1000000) DIV n_docs").as("acc_u"),
         expr("CASE WHEN tp + fp > 0 THEN (tp * 1000000) DIV (tp + fp) END").as("prec_u"),
         expr("CASE WHEN tp + fn > 0 THEN (tp * 1000000) DIV (tp + fn) END").as("rec_u"))
-      .localCheckpoint() // pin before dropping the shared feature cache
+      .transform(Steps.pin) // pin before dropping the shared feature cache
     inputs.unpersist()
     out
   }
@@ -1673,7 +1674,7 @@ object TextOps {
   def nsTextClassifyHoldout(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
     val split = DedupOps.nsCorpusSplit(spark, dir)
-      .select("doc_id", "split").localCheckpoint()
+      .select("doc_id", "split").transform(Steps.pin)
     val trainIds = split.where(col("split") === "train").select("doc_id")
     val (w, inputs) = trainClassifier(
       docs.join(trainIds, Seq("doc_id"), "left_semi"))

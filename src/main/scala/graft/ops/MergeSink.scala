@@ -505,7 +505,7 @@ object MergeSink {
     val w = Window.partitionBy(keys.map(col): _*)
     val resolved = all.withColumn("_ms", max(col(seqCol)).over(w))
       .where(col(seqCol) === col("_ms")).drop("_ms", seqCol)
-      .localCheckpoint() // pin before any delete (the compactLog contract)
+      .transform(Steps.pin) // pin before any delete (the compactLog contract)
     publishLogSeq(resolved, path, 0, files, sortCols, seqCol)
     onAfterPin()
     retireFolded(fs, rootDir, seqCol, gens, storeFor(spark, rootDir, store))
@@ -549,7 +549,7 @@ object MergeSink {
     val resolved = all.withColumn("_rn", row_number().over(w))
       .where(col("_rn") === 1).drop("_rn")
       .withColumn(seqCol, lit(0))
-      .localCheckpoint()
+      .transform(Steps.pin)
     publishPartitionedCols(resolved, path, seqCol +: subCols)
     onAfterPin()
     retireFolded(rootFs, rootDir, seqCol, gens, storeFor(spark, rootDir, store))

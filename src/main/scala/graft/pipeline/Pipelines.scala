@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import graft.model.Tables
-import graft.ops.{ArtifactMeta, IncomeKernel, WindowOps}
+import graft.ops.{ArtifactMeta, IncomeKernel, Steps, WindowOps}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1169,14 +1169,14 @@ object Pipelines {
       .select("doc_id", "lang", "component", "toks", "cum_before",
         "first_chunk", "last_chunk", "n_chunks")
       .withColumn("state", lit("appended"))
-      .localCheckpoint() // pin before the manifest/labels upserts below
+      .transform(Steps.pin) // pin before the manifest/labels upserts below
     // The batch shingle cache has now served both its consumers (the
     // contamination gate above and, transitively, the pinned `appended`);
     // drop it so a long Verify/Bench session doesn't carry it.
     batchSets.unpersist()
     // Base rows: the stored manifest SNAPSHOT (last-writer-wins over the
     // day log) RE-STATED through the touched components; pinned
-    // (localCheckpoint) BEFORE the artifact appends so the returned frame
+    // (Steps.pin) BEFORE the artifact appends so the returned frame
     // cannot observe its own updates. Revocation is STICKY: a row a prior
     // delta tombstoned stays revoked (its chunk range is a permanent hole
     // in the append-only stream), though its component keeps tracking
@@ -1204,7 +1204,7 @@ object Pipelines {
     val tornRelabel = lbl.where(col("component") =!= col("doc_id"))
       .select(col("doc_id").as("component"),
         col("component").as("torn_component"))
-    // Pinned (localCheckpoint) BEFORE the artifact publishes below: both
+    // Pinned (Steps.pin) BEFORE the artifact publishes below: both
     // `base` and `changed` derive from this frame, and tornRelabel reads
     // the labels TABLE — evaluating it lazily after the labels upsert
     // would observe this run's own writes.
@@ -1217,7 +1217,7 @@ object Pipelines {
         when(col("state") === "revoked", lit("revoked"))
           .when(col("fin_comp") =!= col("doc_id"), lit("revoked"))
           .otherwise(lit("base")))
-      .localCheckpoint()
+      .transform(Steps.pin)
     def restated(df: DataFrame): DataFrame =
       df.select(col("doc_id"), col("lang"), col("fin_comp").as("component"),
         col("toks"), col("cum_before"), col("first_chunk"), col("last_chunk"),

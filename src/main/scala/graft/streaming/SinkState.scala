@@ -2,17 +2,19 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Restart-time sink readback shared by the admission twins
-  * ([[StreamingDedup.nearDupAdmission]], [[StreamingSemDedup]]): the sink
-  * is the committed truth an index extension is rebuilt from.
+/** Restart-time sink readback shared by the four admission twins
+  * ([[StreamingDedup.nearDupAdmission]], [[StreamingUrlDedup]],
+  * [[StreamingSemDedup]], [[StreamingAdmissionChain]]): the sink is the
+  * committed truth their [[AdmissionExtension]] is rebuilt from.
   */
 object SinkState {
 
-  /** The sink's committed rows, or None when this is a genuine first
-    * start. ONLY a missing/empty sink means first start; any other read
-    * failure (transient FS error, corrupt footer) must propagate — a
-    * catch-all fallback would silently restart with an EMPTY index and
-    * re-admit near-dups of prior admissions.
+  /** The sink's committed rows, with the `batch_id` partition column the
+    * extension's `src_batch` tags are rebuilt from, or None when this is
+    * a genuine first start. ONLY a missing/empty sink means first start;
+    * any other read failure (transient FS error, corrupt footer) must
+    * propagate — a catch-all fallback would silently restart with an
+    * EMPTY index and re-admit near-dups of prior admissions.
     *
     * A sink dir holding ZERO data files (a crash during the very first
     * batch's write leaves only _temporary/ or _SUCCESS markers) is
@@ -21,12 +23,7 @@ object SinkState {
     * permanent crash loop. Hidden-path components (_/. prefixed, at any
     * depth) are exactly what Spark's own file index skips.
     */
-  /** `keepBatchId = true` retains the `batch_id` partition column —
-    * [[StreamingAdmissionChain]] rebuilds its src_batch extension tags
-    * from it; the doc-keyed twins drop it.
-    */
-  def priorSink(session: SparkSession, outPath: String,
-      keepBatchId: Boolean = false): Option[DataFrame] = {
+  def priorSink(session: SparkSession, outPath: String): Option[DataFrame] = {
     val sinkPath = new org.apache.hadoop.fs.Path(outPath)
     val fs = sinkPath.getFileSystem(session.sparkContext.hadoopConfiguration)
     def hasDataFiles: Boolean = {
@@ -44,10 +41,7 @@ object SinkState {
       false
     }
     if (fs.exists(sinkPath) && hasDataFiles)
-      Some {
-        val df = session.read.parquet(outPath)
-        if (keepBatchId) df else df.drop("batch_id")
-      }.filter(df => !df.isEmpty)
+      Some(session.read.parquet(outPath)).filter(df => !df.isEmpty)
     else None
   }
 }

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.operators.{DedupOps, TextOps}
+import graft.ops.Steps
 import graft.pipeline.Pipelines
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -41,11 +42,10 @@ import org.apache.spark.sql.functions._
   * are tagged with the batch that ADMITTED them, and gating excludes
   * only entries tagged with the CURRENT batch id — so a replayed batch
   * can't self-reject, while a document redelivered in a LATER batch
-  * still meets its earlier admission and is rejected (spec-pinned; the
-  * doc-id-keyed exclusion the other twins use cannot tell those two
-  * events apart). On restart every extension is rebuilt, tags included,
-  * from the sink's batch_id partition dirs — the committed truth
-  * ([[SinkState.priorSink]]).
+  * still meets its earlier admission and is rejected (spec-pinned). On
+  * restart every extension is rebuilt, tags included, from the sink's
+  * batch_id partition dirs — the committed truth. The three other
+  * admission twins share this recipe ([[AdmissionExtension]]).
   *
   * Scale posture: the static gates are metadata-scale broadcasts (probe
   * shingles) or materialized index frames (corpus fps, banded sigs +
@@ -66,76 +66,30 @@ object StreamingAdmissionChain {
       onAfterUrlGate: Option[DataFrame => Unit] = None)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     val session = corpusDocs.sparkSession
-    val urlGated = corpusUrls.isDefined && docStream.columns.contains("url")
-    // Static gates, materialized once at stream start.
-    val benchSh = DedupOps.shingles(probeDocs).select("sh").distinct()
-      .localCheckpoint()
-    val corpusFp = Pipelines.contentFp(corpusDocs).localCheckpoint()
-    // Gate-0 statics: corpus canonicals (sentinel id — see
-    // StreamingUrlDedup) + the admitted-canonical extension. Option, not
-    // a null sentinel: a missed urlGated guard fails to compile against
-    // an Option instead of NPE-ing at stream start.
-    val baseCanon: Option[DataFrame] =
-      if (urlGated) Some(corpusUrls.get
-        .select(DedupOps.canonicalUrl(col("url")).as("canonical")).distinct()
-        .withColumn("doc_id", lit(-1L)).select("doc_id", "canonical")
-        .localCheckpoint())
-      else None
-    val (baseBanded, baseSets) = DedupOps.corpusIndexMaterialized(corpusDocs)
-    // Admitted-documents extensions, every row tagged with the batch that
-    // admitted it (`src_batch`). Replay safety keys on THAT, not on the
-    // current batch's doc ids: a replayed batch B sees the index minus
-    // only its own prior contribution (src_batch = B), while a document
-    // RE-SENT in a later batch still meets its earlier admission and is
-    // rejected as the duplicate it is — checkpoint replay and cross-batch
-    // redelivery are different events and get different treatment.
-    // On restart the tags rebuild from the sink's batch_id partition dirs.
-    val prior = SinkState.priorSink(session, outPath, keepBatchId = true)
-    def withBatchTag(p: DataFrame, of: DataFrame): DataFrame =
-      of.join(p.select(col("doc_id"),
-        col("batch_id").cast("long").as("src_batch")), "doc_id")
-    var extFp = prior.map(p => withBatchTag(p, Pipelines.contentFp(p)))
-      .getOrElse(corpusFp.limit(0).withColumn("src_batch", lit(0L)))
-      .localCheckpoint()
-    var extCanon: Option[DataFrame] = baseCanon.map { bc =>
-      // Restart rebuild GUARDED on the prior sink actually carrying a
-      // `url` column: a URL-gated stream restarted over admitted output
-      // written BEFORE URL gating existed must fall back to the empty
-      // extension (those admissions have no canonicals to replay), not
-      // throw AnalysisException at select("url") on stream start.
-      prior.filter(_.columns.contains("url"))
-        .map(p => withBatchTag(p, p.select(col("doc_id"),
-          DedupOps.canonicalUrl(col("url")).as("canonical"))))
-        .getOrElse(bc.limit(0).withColumn("src_batch", lit(0L)))
-        .localCheckpoint()
-    }
-    val (extB0, extS0) = prior.map { p =>
-      val (b, s) = DedupOps.corpusIndexMaterialized(p)
-      (withBatchTag(p, b), withBatchTag(p, s))
-    }.getOrElse((
-      baseBanded.limit(0).withColumn("src_batch", lit(0L)),
-      baseSets.limit(0).withColumn("src_batch", lit(0L))))
-    var extBanded = extB0.localCheckpoint()
-    var extSets = extS0.localCheckpoint()
+    // Static gate, materialized once at stream start.
+    val benchSh = Steps.pin(DedupOps.shingles(probeDocs).select("sh").distinct())
+    // Index extensions over the corpus, every admitted row tagged with the
+    // batch that admitted it, rebuilt from the sink on restart.
+    val prior = SinkState.priorSink(session, outPath)
+    def fps(docs: DataFrame): Seq[DataFrame] = Seq(Pipelines.contentFp(docs))
+    val extFp = AdmissionExtension(prior, "doc_id", fps(corpusDocs).map(Steps.pin))(fps)
+    val extNear = AdmissionExtension.nearDup(prior, corpusDocs)
+    // Gate 0 runs when the stream carries a `url` column and corpusUrls is
+    // supplied. Its restart rebuild is GUARDED on the prior sink actually
+    // carrying `url`: a URL-gated stream restarted over admitted output
+    // written BEFORE URL gating existed must start from the empty
+    // extension (those admissions have no canonicals to replay), not
+    // throw AnalysisException at select("url") on stream start.
+    val extUrl = corpusUrls.filter(_ => docStream.columns.contains("url"))
+      .map(AdmissionExtension.urls(prior.filter(_.columns.contains("url")), _))
     docStream.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         // 0. URL canonical dup vs corpus + admitted, with intra-batch
         //    min-doc_id survivorship — BEFORE any content gate touches
         //    the text (the onAfterUrlGate seam lets a spec pin that
-        //    ordering). Replay-safe exactly like the other extensions.
-        val s0 = (baseCanon, extCanon) match {
-          case (Some(bc), Some(ec)) =>
-            val canon = batch.withColumn(
-              "canonical", DedupOps.canonicalUrl(col("url")))
-            val firsts = canon.withColumn("_rn", row_number().over(
-                org.apache.spark.sql.expressions.Window
-                  .partitionBy("canonical").orderBy("doc_id")))
-              .where(col("_rn") === 1).drop("_rn")
-            val idx = bc.select("canonical").unionByName(
-              ec.where(col("src_batch") =!= batchId).select("canonical"))
-            firsts.join(idx, Seq("canonical"), "left_anti").drop("canonical")
-          case _ => batch
-        }
+        //    ordering).
+        val s0 = extUrl.map(AdmissionExtension.newUrls(batch, batchId, _).drop("canonical"))
+          .getOrElse(batch)
         onAfterUrlGate.foreach(f => f(s0))
         // 1. Gopher: per-row rules, no state touched.
         val s1 = s0.join(
@@ -146,20 +100,15 @@ object StreamingAdmissionChain {
         //    fp frames — per-batch cost is a scan, never a corpus shuffle
         //    (the bucketed-artifact probe replaces even the scan at
         //    production scale).
-        val extFpNow = extFp.where(col("src_batch") =!= batchId)
         val batchFp = Pipelines.contentFp(s1)
-        val dupFp = corpusFp.select("fp").unionByName(extFpNow.select("fp"))
+        val dupFp = extFp.indexFor(batchId).head.select("fp")
           .join(broadcast(batchFp.select("fp").distinct()), Seq("fp"), "left_semi")
         val s2 = s1.join(
           batchFp.join(broadcast(dupFp), Seq("fp"), "left_semi").select("doc_id"),
           Seq("doc_id"), "left_anti")
         // 3. Near-dup vs banded index + admitted extension.
-        val idxBanded = baseBanded.unionByName(
-          extBanded.where(col("src_batch") =!= batchId).drop("src_batch"))
-        val idxSets = baseSets.unionByName(
-          extSets.where(col("src_batch") =!= batchId).drop("src_batch"))
-        val nearIds = DedupOps
-          .matchAgainstIndex(s2, idxBanded, idxSets, cacheShingles = false)
+        val Seq(idxBanded, idxSets) = extNear.indexFor(batchId)
+        val nearIds = DedupOps.matchAgainstIndex(s2, idxBanded, idxSets)
           .select(col("batch_doc").as("doc_id"))
         val s3 = s2.join(nearIds, Seq("doc_id"), "left_anti")
         // 4. Contamination vs the broadcast probe shingles.
@@ -170,25 +119,9 @@ object StreamingAdmissionChain {
         val sinkDir = s"$outPath/batch_id=$batchId"
         admittedNow.write.mode("overwrite").parquet(sinkDir)
         // Fold the committed admissions into every extension (reading
-        // back from the sink, which a replay would regenerate), tagged
-        // with this batch id.
+        // back from the sink, which a replay would regenerate).
         val admitted = batch.sparkSession.read.parquet(sinkDir)
-        extFp = extFpNow
-          .unionByName(Pipelines.contentFp(admitted)
-            .withColumn("src_batch", lit(batchId)))
-          .localCheckpoint()
-        extCanon = extCanon.map(_.where(col("src_batch") =!= batchId)
-          .unionByName(admitted.select(col("doc_id"),
-              DedupOps.canonicalUrl(col("url")).as("canonical"))
-            .withColumn("src_batch", lit(batchId)))
-          .localCheckpoint())
-        val (nb, ns) = DedupOps.corpusIndexMaterialized(admitted)
-        extBanded = extBanded.where(col("src_batch") =!= batchId)
-          .unionByName(nb.withColumn("src_batch", lit(batchId)))
-          .localCheckpoint()
-        extSets = extSets.where(col("src_batch") =!= batchId)
-          .unionByName(ns.withColumn("src_batch", lit(batchId)))
-          .localCheckpoint()
+        (Seq(extFp, extNear) ++ extUrl).foreach(_.fold(batchId, admitted))
         ()
       }
       .option("checkpointLocation", checkpointDir)

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.ops.Steps
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -10,7 +11,7 @@ import org.apache.spark.sql.functions._
   * the corpus, instead of being scrubbed by a nightly batch scan.
   *
   * Scale posture: the probe index is the distinct shingle set of the eval
-  * suites — a fixed, broadcast-sized frame (localCheckpoint'ed once, at
+  * suites — a fixed, broadcast-sized frame (pinned once, at
   * stream start); per-batch work is O(batch shingles), never O(corpus).
   * Idempotency: each batch overwrites its own `batch_id=` directory, so
   * foreachBatch replays replace rather than duplicate — the same contract
@@ -32,7 +33,7 @@ object StreamingDecontaminate {
       : org.apache.spark.sql.streaming.StreamingQuery = {
     val dedup = graft.operators.DedupOps
     val benchSh = dedup.shingles(probeDocs).select("sh").distinct()
-      .localCheckpoint()
+      .transform(Steps.pin)
     docStream.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val drops = dedup.contaminationProfile(dedup.shingles(batch), benchSh)

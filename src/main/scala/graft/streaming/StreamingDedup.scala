@@ -38,18 +38,10 @@ object StreamingDedup {
     * `matchAgainstIndex`). Per-batch work is O(batch + matching band
     * buckets), never O(corpus).
     *
-    * Idempotency under foreachBatch's at-least-once contract: (1) each
-    * batch overwrites its own `batch_id=` directory, so a replay replaces
-    * rather than duplicates; (2) before matching, any index entries keyed
-    * by the CURRENT batch's doc ids are anti-joined away — on a replay the
-    * batch is matched exactly as on first delivery (its own prior
-    * admissions can't self-reject it) and its index contribution is
-    * rebuilt rather than doubled.
-    *
-    * Index growth per batch is two localCheckpoint'ed frames (base index +
-    * admitted extension); the per-batch shingle frames are NOT cached
-    * (`cacheShingles = false`), so an unbounded stream leaves no
-    * accumulating CacheManager entries.
+    * Idempotency under foreachBatch's at-least-once contract: each batch
+    * overwrites its own `batch_id=` directory, so a replay replaces rather
+    * than duplicates, and the index extension keys replays on the batch
+    * that admitted each row ([[AdmissionExtension]]).
     */
   def nearDupAdmission(
       docStream: DataFrame,
@@ -60,46 +52,23 @@ object StreamingDedup {
         org.apache.spark.sql.streaming.Trigger.AvailableNow())
       : org.apache.spark.sql.streaming.StreamingQuery = {
     val dedup = graft.operators.DedupOps
-    val (baseBanded, baseSets) = dedup.corpusIndexMaterialized(corpusDocs)
-    // Admitted-documents extension of the index; grows per batch. Batches
-    // run sequentially on the stream thread, so plain vars are safe.
-    // On a RESTART the extension must be rebuilt from the sink: committed
-    // batches never replay, so their admissions would otherwise vanish
-    // from the index and their near-dups be re-admitted. The sink is the
-    // committed truth (each batch dir is overwrite-idempotent), so the
-    // rebuilt extension equals the pre-restart one.
-    val session = corpusDocs.sparkSession
-    // Restart semantics live in SinkState.priorSink: only a genuinely
-    // absent/empty sink means first start; other read failures propagate.
-    val prior = SinkState.priorSink(session, outPath)
-    val (extB0, extS0) = prior.map(dedup.corpusIndexMaterialized)
-      .getOrElse((baseBanded.limit(0), baseSets.limit(0)))
-    var extBanded = extB0.localCheckpoint()
-    var extSets = extS0.localCheckpoint()
+    // The (banded, sets) index grows by each batch's admissions and is
+    // rebuilt from the committed sink on a restart: committed batches
+    // never replay, so their admissions would otherwise vanish from the
+    // index and their near-dups be re-admitted. Batches run sequentially
+    // on the stream thread, so the extension needs no lock.
+    val ext = AdmissionExtension.nearDup(
+      SinkState.priorSink(corpusDocs.sparkSession, outPath), corpusDocs)
     docStream.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val curIds = batch.select("doc_id")
-        val idxBanded = baseBanded.unionByName(extBanded)
-          .join(curIds, Seq("doc_id"), "left_anti")
-        val idxSets = baseSets.unionByName(extSets)
-          .join(curIds, Seq("doc_id"), "left_anti")
-        val dups = dedup
-          .matchAgainstIndex(batch, idxBanded, idxSets, cacheShingles = false)
+        val Seq(idxBanded, idxSets) = ext.indexFor(batchId)
+        val dups = dedup.matchAgainstIndex(batch, idxBanded, idxSets)
           .select(col("batch_doc").as("doc_id"))
         // left_anti is unaffected by duplicate right rows — no distinct.
         val sinkDir = s"$outPath/batch_id=$batchId"
         batch.join(dups, Seq("doc_id"), "left_anti")
           .write.mode("overwrite").parquet(sinkDir)
-        // Fold the admitted documents into the index, reading back from
-        // the sink (the committed truth a replay would regenerate). The
-        // anti-join drops this batch's prior contribution on a replay;
-        // localCheckpoint keeps the extension plan-free across batches.
-        val admitted = batch.sparkSession.read.parquet(sinkDir)
-        val (nb, ns) = dedup.corpusIndexMaterialized(admitted)
-        extBanded = extBanded.join(curIds, Seq("doc_id"), "left_anti")
-          .unionByName(nb).localCheckpoint()
-        extSets = extSets.join(curIds, Seq("doc_id"), "left_anti")
-          .unionByName(ns).localCheckpoint()
+        ext.fold(batchId, batch.sparkSession.read.parquet(sinkDir))
         ()
       }
       .option("checkpointLocation", checkpointDir)

@@ -20,8 +20,9 @@ import org.apache.spark.sql.DataFrame
   *
   * Idempotency under foreachBatch's at-least-once contract is inherited
   * verbatim from the minhash admission: per-batch overwrite of its own
-  * `batch_id=` directory, current-ids anti-join against the index before
-  * matching, and an index extension rebuilt from the sink on restart.
+  * `batch_id=` directory, each batch matched against the extension minus
+  * the rows it admitted itself ([[AdmissionExtension]]'s `src_batch`
+  * key), and an index extension rebuilt from the sink on restart.
   */
 object StreamingSemDedup {
 
@@ -36,33 +37,23 @@ object StreamingSemDedup {
       trigger: org.apache.spark.sql.streaming.Trigger =
         org.apache.spark.sql.streaming.Trigger.AvailableNow())
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    val session = corpusEmb.sparkSession
     val (cents, baseAssign) = SimilarityOps.semIndexMaterialized(corpusEmb)
     // Extension rebuilt from the committed sink on restart — same
     // reasoning as StreamingDedup.nearDupAdmission: committed batches
     // never replay, so their admissions must be re-indexed from the sink
     // or their semantic twins would be re-admitted.
-    val prior = SinkState.priorSink(session, outPath)
-      .map(df => df.select("vec_id", "embedding"))
-    var ext = prior.map(p => SimilarityOps.semAssign(p, cents).localCheckpoint())
-      .getOrElse(baseAssign.limit(0).localCheckpoint())
+    val ext = AdmissionExtension(SinkState.priorSink(corpusEmb.sparkSession, outPath),
+      "vec_id", Seq(baseAssign))(admitted => Seq(SimilarityOps.semAssign(admitted, cents)))
     embStream.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val curIds = batch.select("vec_id")
-        val idx = baseAssign.unionByName(ext)
-          .join(curIds, Seq("vec_id"), "left_anti")
         val dups = SimilarityOps
-          .semMatchAgainstIndex(batch.select("vec_id", "embedding"), idx,
-            SimilarityOps.centLits(cents))
+          .semMatchAgainstIndex(batch.select("vec_id", "embedding"),
+            ext.indexFor(batchId).head, SimilarityOps.centLits(cents))
           .select(org.apache.spark.sql.functions.col("batch_vec").as("vec_id"))
         val sinkDir = s"$outPath/batch_id=$batchId"
         batch.join(dups, Seq("vec_id"), "left_anti")
           .write.mode("overwrite").parquet(sinkDir)
-        val admitted = batch.sparkSession.read.parquet(sinkDir)
-          .select("vec_id", "embedding")
-        ext = ext.join(curIds, Seq("vec_id"), "left_anti")
-          .unionByName(SimilarityOps.semAssign(admitted, cents))
-          .localCheckpoint()
+        ext.fold(batchId, batch.sparkSession.read.parquet(sinkDir))
         ()
       }
       .option("checkpointLocation", checkpointDir)

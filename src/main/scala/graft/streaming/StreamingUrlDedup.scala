@@ -1,8 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
 
 /** Streaming URL-admission gate — the ingest-time form of
   * [[graft.operators.DedupOps.nsDedupUrls]]: a crawler frontier admits a
@@ -22,8 +20,9 @@ import org.apache.spark.sql.functions._
   * Idempotency under foreachBatch's at-least-once contract, exactly the
   * nearDupAdmission recipe: each batch overwrites its own directory, the
   * extension is rebuilt from the sink on restart (the committed truth),
-  * and the current batch's ids are anti-joined out of the index before
-  * matching so a replayed batch cannot self-reject.
+  * and each batch is matched against the extension minus the rows it
+  * admitted itself ([[AdmissionExtension]]), so a replayed batch cannot
+  * self-reject while a later redelivery is rejected.
   */
 object StreamingUrlDedup {
 
@@ -35,43 +34,14 @@ object StreamingUrlDedup {
       trigger: org.apache.spark.sql.streaming.Trigger =
         org.apache.spark.sql.streaming.Trigger.AvailableNow())
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    val dedup = graft.operators.DedupOps
     val session = corpusUrls.sparkSession
-    // Corpus canonicals carry a sentinel id no batch can claim, so the
-    // replay anti-join below can never strip a corpus row.
-    val baseCanon = corpusUrls
-      .select(dedup.canonicalUrl(col("url")).as("canonical"))
-      .distinct()
-      .withColumn("doc_id", lit(-1L))
-      .select("doc_id", "canonical")
-      .localCheckpoint()
-    val prior = SinkState.priorSink(session, outPath)
-    var ext = prior.map(_.select(col("doc_id"), col("canonical")))
-      .getOrElse(baseCanon.limit(0))
-      .localCheckpoint()
+    val ext = AdmissionExtension.urls(SinkState.priorSink(session, outPath), corpusUrls)
     docStream.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val curIds = batch.select("doc_id")
-        val canon = batch.withColumn("canonical", dedup.canonicalUrl(col("url")))
-        // Intra-batch survivorship: smallest doc_id per canonical (the
-        // batch query's min() rule).
-        val firsts = canon
-          .withColumn("_rn", row_number().over(
-            Window.partitionBy("canonical").orderBy("doc_id")))
-          .where(col("_rn") === 1).drop("_rn")
-        // left_anti is unaffected by duplicate right rows — no distinct;
-        // the current batch's prior contribution drops out for replays.
-        val idx = baseCanon
-          .unionByName(ext.join(curIds, Seq("doc_id"), "left_anti"))
         val sinkDir = s"$outPath/batch_id=$batchId"
-        firsts.join(idx.select("canonical"), Seq("canonical"), "left_anti")
+        AdmissionExtension.newUrls(batch, batchId, ext)
           .write.mode("overwrite").parquet(sinkDir)
-        // Fold from the sink read-back (the committed truth a replay
-        // regenerates); localCheckpoint keeps the extension plan-free.
-        val admitted = session.read.parquet(sinkDir)
-          .select(col("doc_id"), col("canonical"))
-        ext = ext.join(curIds, Seq("doc_id"), "left_anti")
-          .unionByName(admitted).localCheckpoint()
+        ext.fold(batchId, session.read.parquet(sinkDir))
         ()
       }
       .option("checkpointLocation", checkpointDir)

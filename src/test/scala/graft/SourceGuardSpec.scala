@@ -10,7 +10,8 @@ import scala.jdk.CollectionConverters._
   * reach queries only as typed Columns (never through a runtime function
   * registration), every session is built by [[Driver]], and the harnesses
   * take their query mixes from the registry's kinds, not from name lists,
-  * and artifact roots are derived and committed in one module.
+  * artifact roots are derived and committed in one module, and steps are
+  * materialized by one module.
   */
 class SourceGuardSpec extends AnyFunSuite {
 
@@ -61,5 +62,11 @@ class SourceGuardSpec extends AnyFunSuite {
       if Paths.get(p).getFileName.toString != "ArtifactMeta.scala"
     } yield s"$token in $p"
     assert(hits.isEmpty, s"artifact-root format outside ArtifactMeta: ${hits.mkString(", ")}")
+  }
+
+  test("only Steps materializes a step") {
+    val hits = offenders(sources("src/main"), "localCheckpoint(")
+      .filterNot(p => Paths.get(p).getFileName.toString == "Steps.scala")
+    assert(hits.isEmpty, s"localCheckpoint outside graft.ops.Steps: ${hits.mkString(", ")}")
   }
 }

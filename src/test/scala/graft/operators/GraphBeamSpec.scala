@@ -45,6 +45,22 @@ class GraphBeamSpec extends SparkSpec {
     }
   }
 
+  test("a beam evaluation leaves pinned only the graph it walked and its last beam") {
+    graft.Driver.clearState(spark)
+    val result = graft.SparkEntry.queries("ns_sim_graph_beam")(spark, sfDir)
+    val rows = result.collect().toSeq
+    val left = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    info(s"persisted RDDs after one evaluation: ${left.size}")
+    val read = result.queryExecution.logical.collect {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
+    }.toSet
+    assert(read.nonEmpty && read.subsetOf(left), s"result reads $read, persisted $left")
+    assert(left.size <= 2, s"${left.size} pinned steps left behind: $left")
+    // Nothing the result reads was released: it evaluates again, unchanged.
+    assert(result.collect().toSeq == rows)
+    graft.Driver.clearState(spark)
+  }
+
   test("stored-graph serve path is row-identical to the in-session build-and-walk") {
     val fromIndex = IndexOps.queries("ns_sim_graph_indexed")(spark, sfDir).collect().toSeq
     val inSession = SimilarityOps.nsSimGraphBeam(spark, sfDir).collect().toSeq

@@ -171,4 +171,33 @@ class StreamingAdmissionChainSpec extends SparkSpec {
       .collect().map(_.getLong(0)).sorted.toSeq
     assert(admitted == Seq(2L, 4L, 7L), s"got $admitted")
   }
+
+  test("a replayed batch is not rejected by its own sink rows") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    def passText(seed: Int, n: Int = 24): String =
+      (Seq("the", "of") ++ (0 until n - 2).map(i => s"r${seed}z$i"))
+        .mkString(" ")
+    val text = passText(1)
+    val corpus = Seq((100L, passText(100))).toDF("doc_id", "text")
+    val probe = Seq((200L, passText(200))).toDF("doc_id", "text")
+    val out = tmp("graft_chain4_out") + "/admitted"
+    val cp = tmp("graft_chain4_cp")
+    // The last run crashed after batch 0's sink write and before its
+    // checkpoint commit: the sink holds doc 1, the checkpoint is empty.
+    Seq((1L, text)).toDF("doc_id", "text").write.parquet(s"$out/batch_id=0")
+    val input = MemoryStream[(Long, String)]
+    val query = StreamingAdmissionChain.admissionStream(
+      input.toDS().toDF("doc_id", "text"), corpus, probe, out, cp,
+      trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
+    try {
+      // Batch 0 replays doc 1: neither the exact nor the near-dup
+      // extension may reject it by its own sink rows.
+      input.addData(Seq((1L, text)))
+      query.processAllAvailable()
+    } finally query.stop()
+    val admittedRows = spark.read.parquet(out).select("doc_id")
+      .collect().map(_.getLong(0)).sorted.toSeq
+    assert(admittedRows == Seq(1L), s"got $admittedRows — replay self-rejected")
+  }
 }

@@ -153,4 +153,80 @@ class StreamingDedupSpec extends SparkSpec {
       .collect().map(_.getLong(0)).toSet
     assert(admitted == Set(1L, 3L), s"got $admitted")
   }
+
+  test("a document redelivered in a later batch is rejected by its own earlier admission") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val sameText = "the quick brown fox jumps over the lazy dog again and again"
+    val corpus = Seq((100L, "completely different corpus material words here"))
+      .toDF("doc_id", "text")
+    val input = MemoryStream[(Long, String)]
+    val out = java.nio.file.Files.createTempDirectory("graft_redeliver_out").toString + "/admitted"
+    val cp = java.nio.file.Files.createTempDirectory("graft_redeliver_cp").toString
+    val query = StreamingDedup.nearDupAdmission(
+      input.toDS().toDF("doc_id", "text"), corpus, out, cp,
+      trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
+    try {
+      // Batch 1: doc 1 admitted and indexed.
+      input.addData(Seq((1L, sameText)))
+      query.processAllAvailable()
+      // Batch 2: doc 1 REDELIVERED verbatim — not a replay, so its batch-1
+      // admission must reject it; doc 3 is fresh.
+      input.addData(Seq((1L, sameText),
+        (3L, "another unrelated collection of words entirely fresh content")))
+      query.processAllAvailable()
+    } finally query.stop()
+    val admittedRows = spark.read.parquet(out).select("doc_id")
+      .collect().map(_.getLong(0)).sorted.toSeq
+    assert(admittedRows == Seq(1L, 3L), s"got $admittedRows — redelivery admitted twice")
+  }
+
+  test("a replayed batch is not rejected by its own sink rows") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val text = "the quick brown fox jumps over the lazy dog again and again"
+    val corpus = Seq((100L, "completely different corpus material words here"))
+      .toDF("doc_id", "text")
+    val out = java.nio.file.Files.createTempDirectory("graft_replay_out").toString + "/admitted"
+    val cp = java.nio.file.Files.createTempDirectory("graft_replay_cp").toString
+    // The last run crashed after batch 0's sink write and before its
+    // checkpoint commit: the sink holds doc 1, the checkpoint is empty.
+    Seq((1L, text)).toDF("doc_id", "text").write.parquet(s"$out/batch_id=0")
+    val input = MemoryStream[(Long, String)]
+    val query = StreamingDedup.nearDupAdmission(
+      input.toDS().toDF("doc_id", "text"), corpus, out, cp,
+      trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
+    try {
+      // Batch 0 replays doc 1: its own sink rows must not reject it.
+      input.addData(Seq((1L, text)))
+      query.processAllAvailable()
+    } finally query.stop()
+    val admittedRows = spark.read.parquet(out).select("doc_id")
+      .collect().map(_.getLong(0)).sorted.toSeq
+    assert(admittedRows == Seq(1L), s"got $admittedRows — replay self-rejected")
+  }
+
+  test("a streamed document that reuses a corpus doc_id meets that corpus entry") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val text = "the quick brown fox jumps over the lazy dog again and again"
+    val corpus = Seq((100L, text)).toDF("doc_id", "text")
+    val out = java.nio.file.Files.createTempDirectory("graft_corpus_id_out").toString + "/admitted"
+    val cp = java.nio.file.Files.createTempDirectory("graft_corpus_id_cp").toString
+    val input = MemoryStream[(Long, String)]
+    val query = StreamingDedup.nearDupAdmission(
+      input.toDS().toDF("doc_id", "text"), corpus, out, cp,
+      trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
+    try {
+      // Doc 100 re-sends the corpus document: only the stream's own
+      // admissions are keyed by batch, so the corpus entry rejects it
+      // (the chain's rule); doc 3 is fresh.
+      input.addData(Seq((100L, text),
+        (3L, "another unrelated collection of words entirely fresh content")))
+      query.processAllAvailable()
+    } finally query.stop()
+    val admittedRows = spark.read.parquet(out).select("doc_id")
+      .collect().map(_.getLong(0)).sorted.toSeq
+    assert(admittedRows == Seq(3L), s"got $admittedRows")
+  }
 }

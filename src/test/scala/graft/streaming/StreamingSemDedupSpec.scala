@@ -117,4 +117,46 @@ class StreamingSemDedupSpec extends SparkSpec {
       s"admitted ${admitted.size} vs expected ${expected.size}: " +
         s"extra=${admitted -- expected} missing=${expected -- admitted}")
   }
+
+  test("a vector redelivered in a later batch is rejected by its own earlier admission") {
+    val corpus = embDF(Seq((0L, vec(0))))
+    val srcDir = java.nio.file.Files.createTempDirectory("graft_sem_redeliver_src")
+    val out = java.nio.file.Files.createTempDirectory("graft_sem_redeliver_out").toString + "/admitted"
+    val cp = java.nio.file.Files.createTempDirectory("graft_sem_redeliver_cp").toString
+    def land(rows: Seq[(Long, Seq[Float])], name: String): Unit = {
+      val tmp = java.nio.file.Files.createTempDirectory("graft_sem_redeliver_split").toString
+      embDF(rows).coalesce(1).write.mode("overwrite").parquet(tmp)
+      val part = new java.io.File(tmp).listFiles()
+        .find(_.getName.endsWith(".parquet")).get.toPath
+      java.nio.file.Files.move(part, srcDir.resolve(name))
+    }
+    // Batch 1: vec 2 admitted. Batch 2: vec 2 REDELIVERED verbatim ->
+    // rejected by its batch-1 admission; vec 3 (axis 2) fresh.
+    land(Seq((2L, vec(1))), "a.parquet")
+    land(Seq((2L, vec(1)), (3L, vec(2))), "b.parquet")
+    val stream = spark.readStream.schema(corpus.schema)
+      .option("maxFilesPerTrigger", "1").parquet(srcDir.toString)
+    StreamingSemDedup.semDedupAdmission(stream, corpus, out, cp).awaitTermination()
+    val admittedRows = spark.read.parquet(out).select("vec_id")
+      .collect().map(_.getLong(0)).sorted.toSeq
+    assert(admittedRows == Seq(2L, 3L), s"got $admittedRows — redelivery admitted twice")
+  }
+
+  test("a replayed batch is not rejected by its own sink rows") {
+    val corpus = embDF(Seq((0L, vec(0))))
+    val srcDir = java.nio.file.Files.createTempDirectory("graft_sem_replay_src")
+    val out = java.nio.file.Files.createTempDirectory("graft_sem_replay_out").toString + "/admitted"
+    val cp = java.nio.file.Files.createTempDirectory("graft_sem_replay_cp").toString
+    // The last run crashed after batch 0's sink write and before its
+    // checkpoint commit: the sink holds vec 2, the checkpoint is empty.
+    embDF(Seq((2L, vec(1)))).write.parquet(s"$out/batch_id=0")
+    embDF(Seq((2L, vec(1)))).coalesce(1).write.mode("overwrite")
+      .parquet(srcDir.resolve("a").toString)
+    // Batch 0 replays vec 2: its own sink rows must not reject it.
+    val stream = spark.readStream.schema(corpus.schema).parquet(srcDir.resolve("a").toString)
+    StreamingSemDedup.semDedupAdmission(stream, corpus, out, cp).awaitTermination()
+    val admittedRows = spark.read.parquet(out).select("vec_id")
+      .collect().map(_.getLong(0)).sorted.toSeq
+    assert(admittedRows == Seq(2L), s"got $admittedRows — replay self-rejected")
+  }
 }

@@ -61,4 +61,53 @@ class StreamingUrlDedupSpec extends SparkSpec {
     assert(canon(3L) == "http://d.com/q" && canon(8L) == "https://f.com/z?a=1&b=2",
       s"canonicals: $canon")
   }
+
+  test("a document redelivered in a later batch is rejected by its own earlier admission") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val corpus = Seq("https://a.com/x").toDF("url")
+    val input = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
+    val out = java.nio.file.Files.createTempDirectory("graft_url_redeliver_out").toString + "/admitted"
+    val cp = java.nio.file.Files.createTempDirectory("graft_url_redeliver_cp").toString
+    val query = StreamingUrlDedup.urlAdmission(
+      input.toDS().toDF("doc_id", "url"), corpus, out, cp,
+      trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
+    try {
+      // Batch 1: doc 1 admitted.
+      input.addData(Seq((1L, "https://c.com/p")))
+      query.processAllAvailable()
+      // Batch 2: doc 1 REDELIVERED verbatim -> rejected; doc 2 new.
+      input.addData(Seq((1L, "https://c.com/p"), (2L, "https://e.com/")))
+      query.processAllAvailable()
+    } finally query.stop()
+    val admittedRows = spark.read.parquet(out).select("doc_id")
+      .collect().map(_.getLong(0)).sorted.toSeq
+    assert(admittedRows == Seq(1L, 2L), s"got $admittedRows — redelivery admitted twice")
+  }
+
+  test("a replayed batch is not rejected by its own sink rows") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val corpus = Seq("https://a.com/x").toDF("url")
+    val out = java.nio.file.Files.createTempDirectory("graft_url_replay_out").toString + "/admitted"
+    val cp = java.nio.file.Files.createTempDirectory("graft_url_replay_cp").toString
+    // The last run crashed after batch 0's sink write and before its
+    // checkpoint commit: the sink holds doc 1, the checkpoint is empty.
+    Seq((1L, "https://c.com/p")).toDF("doc_id", "url")
+      .withColumn("canonical",
+        graft.operators.DedupOps.canonicalUrl(org.apache.spark.sql.functions.col("url")))
+      .write.parquet(s"$out/batch_id=0")
+    val input = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
+    val query = StreamingUrlDedup.urlAdmission(
+      input.toDS().toDF("doc_id", "url"), corpus, out, cp,
+      trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
+    try {
+      // Batch 0 replays doc 1: its own sink rows must not reject it.
+      input.addData(Seq((1L, "https://c.com/p")))
+      query.processAllAvailable()
+    } finally query.stop()
+    val admittedRows = spark.read.parquet(out).select("doc_id")
+      .collect().map(_.getLong(0)).sorted.toSeq
+    assert(admittedRows == Seq(1L), s"got $admittedRows — replay self-rejected")
+  }
 }
